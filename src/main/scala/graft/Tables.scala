@@ -30,10 +30,14 @@ object Tables {
     * session-zoned TimestampType (session TZ is UTC, so the NTZ cast
     * is a pure re-tag, not a wall-clock shift).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame = eventsTs(apply(s, d, "events"))
+
+  /** The `ts` normalization of [[events]] over any frame with the events
+    * schema, batch or streaming.
+    */
+  def eventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))

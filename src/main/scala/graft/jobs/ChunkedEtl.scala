@@ -5,7 +5,7 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.GithubSchemas
-import graft.sink.{SnapshotSink, SnapshotWriter}
+import graft.sink.SnapshotSink
 import graft.source.github.GithubSource
 import graft.transform.GithubTransform
 
@@ -14,8 +14,10 @@ import graft.transform.GithubTransform
   * README "Benefits of Chunked Processing"): extract one API page,
   * transform it, load it, repeat. Driver memory holds at most one
   * chunk of raw JSON at a time, so arbitrarily large repositories
-  * stream through at bounded memory — unlike [[EtlJob]]'s simpler
-  * collect-all-pages mode.
+  * stream through at bounded memory. [[EtlJob]]'s default mode
+  * extracts all repos in one parallel DataSource V2 scan instead, and
+  * caches the parsed rows (spilling to disk) until its four table
+  * writes finish.
   *
   * Idempotency across chunks mirrors the reference exactly: one
   * up-front partition DELETE for this run's (snapshot_date, repo)
@@ -46,10 +48,7 @@ object ChunkedEtl {
       val raw: DataFrame = spark.read
         .schema(GithubSchemas.rawPullRequest).json(chunk.toDS)
       val tables = GithubTransform(raw, repo, snapshotDate)
-      for ((name, df) <- SnapshotWriter.TableNames.zip(Seq(
-          tables.pullRequests, tables.commits, tables.reviewers, tables.comments))) {
-        sink.append(name, df)
-      }
+      for ((name, df) <- tables.named) sink.append(name, df)
       chunks += 1
       prs += chunk.size
     }
@@ -58,13 +57,4 @@ object ChunkedEtl {
     sink.finalizeSnapshot(repo, snapshotDate)
     ChunkStats(chunks, prs)
   }
-
-  /** Back-compat parquet form. */
-  def run(
-      spark: SparkSession,
-      repo: String,
-      opts: GithubSource.Options,
-      outDir: String,
-      snapshotDate: Date): ChunkStats =
-    run(spark, repo, opts, new graft.sink.ParquetSnapshotSink(spark, outDir), snapshotDate)
 }

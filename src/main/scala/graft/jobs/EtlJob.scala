@@ -3,15 +3,17 @@ package graft.jobs
 import java.sql.Date
 import java.time.{LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
-import graft.source.github.{GithubAuth, GithubSource}
+import graft.source.github.{GithubAuth, GithubDataSource, GithubSource}
 import graft.sink.{BigQuerySnapshotSink, HttpBigQueryTransport, NdjsonSnapshotSink,
   ParquetSnapshotSink, SnapshotSink}
 import graft.transform.GithubTransform
 
 /** Full ETL run reproducing the reference's `_main()` contract
-  * (main.py:746-904): env-driven config, per-repo loop, run-scoped
+  * (main.py:746-904): env-driven config, run-scoped
   * snapshot date, fail-fast error taxonomy (config error → exit 1;
   * API error → propagated job abort).
   *
@@ -23,6 +25,12 @@ import graft.transform.GithubTransform
   *    absent and proceed unauthenticated, main.py:774-778);
   *  - `GITHUB_API_URL` (optional override, main.py:799-801);
   *  - `GITHUB_TOKEN` (optional pre-minted token, test convenience).
+  *
+  * Modes: by default every repo is extracted in one DataSource V2 scan
+  * (one input partition per repo) and written in one pass;
+  * `GRAFT_CHUNKED=1` runs the reference's bounded-memory page loop
+  * per repo ([[ChunkedEtl]]); `GRAFT_STREAMING=1` runs that loop as a
+  * checkpointed Structured Streaming query ([[StreamingEtl]]).
   */
 object EtlJob {
 
@@ -123,72 +131,53 @@ object EtlJob {
       return
     }
 
-    if (env.get("GRAFT_USE_DSV2").contains("1")) {
-      // all repos in one distributed read (one input partition per
-      // repo — the 1000-repo scale path), transformed in a single
-      // pass keyed by the repo column
-      import org.apache.spark.sql.functions.{col, from_json}
-      var reader = spark.read.format("github")
-        .option("repos", repos.mkString(","))
-        .option("apiUrl", opts.apiUrl)
-      opts.token.foreach(t => reader = reader.option("token", t))
-      opts.appId.foreach(id => reader = reader.option("appId", id))
-      opts.privateKeyPem.foreach(k => reader = reader.option("privateKey", k))
-      // Persist the parsed rows BEFORE fanning out into four table
-      // writes: the first write action fills the cache (one API
-      // extraction), the other three reuse it. Without this each
-      // write (and each isEmpty probe) would re-run the full
-      // pagination + enrichment — up to 8 extractions, each seeing a
-      // different API state, i.e. a mutually inconsistent snapshot.
-      val typed = reader.load()
-        .select(col("repo"),
-          from_json(col("value"), graft.model.GithubSchemas.rawPullRequest).as("pr"))
-        .select((col("repo") +: graft.model.GithubSchemas.rawPullRequest
-          .fieldNames.map(f => col(s"pr.$f"))): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val t = GithubTransform.applyMulti(typed, snapshotDate)
-        // one shuffle keyed by the write partitioning → exactly one
-        // file per (date, repo) partition at write time; no post-hoc
-        // compaction pass (which would be |repos|×4 driver-serial
-        // jobs re-reading data this job just wrote)
-        def onePerPartition(df: org.apache.spark.sql.DataFrame) =
-          df.repartition(
-            org.apache.spark.sql.functions.col("snapshot_date"),
-            org.apache.spark.sql.functions.col("target_repository"))
-        val tables = graft.transform.GithubTransform.GithubTables(
-          onePerPartition(t.pullRequests), onePerPartition(t.commits),
-          onePerPartition(t.reviewers), onePerPartition(t.comments))
-        repos.foreach(r => sink.deleteSnapshot(r, snapshotDate))
-        // skipIfEmpty=false: no per-table isEmpty action on this path
-        sink.writeSnapshot(tables, skipIfEmpty = false)
-        println(s"[etl] ${repos.length} repos via DSv2: wrote snapshot $snapshotDate")
-      } finally typed.unpersist()
-      return
-    }
+    // informational probe, once per repo before any delete
+    // (main.py:833-839); the deletes below make the run idempotent
+    for (repo <- repos if sink.exists(repo, snapshotDate))
+      println(s"[etl] snapshot ($snapshotDate, $repo) exists; overwriting partitions")
 
-    for (repo <- repos) {
-      // dynamic partition overwrite makes the rerun-delete implicit;
-      // the probe is informational parity with main.py:833-839
-      val existed = sink.exists(repo, snapshotDate)
-      if (existed)
-        println(s"[etl] snapshot ($snapshotDate, $repo) exists; overwriting partitions")
-      if (env.get("GRAFT_CHUNKED").contains("1")) {
-        // reference-faithful bounded-memory mode: extract page →
-        // transform → append, one chunk at a time (main.py:871-898)
+    if (env.get("GRAFT_CHUNKED").contains("1")) {
+      // reference-faithful bounded-memory mode: extract page →
+      // transform → append, one chunk at a time (main.py:871-898)
+      for (repo <- repos) {
         val stats = ChunkedEtl.run(spark, repo, opts, sink, snapshotDate)
         println(s"[etl] $repo: wrote snapshot $snapshotDate " +
           s"(${stats.chunks} chunks, ${stats.prs} PRs)")
-      } else {
-        val raw = GithubSource.read(spark, repo, opts)
-        val tables = GithubTransform(raw, repo, snapshotDate)
-        // explicit up-front delete (K1): dynamic overwrite alone can't
-        // clear a partition for a table whose new DataFrame is empty,
-        // which would leave stale rows on rerun
-        sink.deleteSnapshot(repo, snapshotDate)
-        sink.writeSnapshot(tables)
-        println(s"[etl] $repo: wrote snapshot $snapshotDate")
       }
+      return
     }
+
+    // default: all repos in one distributed read (one input partition
+    // per repo), transformed in a single pass keyed by the repo column.
+    // Persist the parsed rows BEFORE fanning out into four table
+    // writes: the first write action fills the cache (one API
+    // extraction), the other three reuse it. Without this each write
+    // would re-run the full pagination + enrichment — four
+    // extractions, each seeing a different API state, i.e. a mutually
+    // inconsistent snapshot.
+    val typed = GithubDataSource.typedDocs(spark.read.format("github")
+      .options(GithubDataSource.encodeOptions(opts))
+      .option("repos", repos.mkString(","))
+      .load())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val t = GithubTransform.applyMulti(typed, snapshotDate)
+      // one shuffle keyed by the write partitioning → exactly one file
+      // per (date, repo) partition at write time; no post-hoc
+      // compaction pass (which would be |repos|×4 driver-serial jobs
+      // re-reading data this job just wrote)
+      def onePerPartition(df: DataFrame) =
+        df.repartition(col("snapshot_date"), col("target_repository"))
+      val tables = GithubTransform.GithubTables(
+        onePerPartition(t.pullRequests), onePerPartition(t.commits),
+        onePerPartition(t.reviewers), onePerPartition(t.comments))
+      // explicit up-front delete (K1): dynamic overwrite alone can't
+      // clear a partition for a table whose new frame is empty, which
+      // would leave stale rows on rerun
+      repos.foreach(r => sink.deleteSnapshot(r, snapshotDate))
+      // skipIfEmpty=false: no per-table isEmpty action on this path
+      sink.writeSnapshot(tables, skipIfEmpty = false)
+      println(s"[etl] ${repos.length} repos: wrote snapshot $snapshotDate")
+    } finally typed.unpersist()
   }
 }

@@ -24,18 +24,8 @@ object RunStream {
     spark.sparkContext.setLogLevel("WARN")
 
     val schema = spark.read.parquet(s"$sfDir/{events}.parquet").schema
-    // same schema-adaptive ts handling as graft.Tables.events — the
-    // testdata has shipped both TIMESTAMP(NANOS)-as-long and
-    // TIMESTAMP(MICROS, NTZ) encodings
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val tsCol = schema("ts").dataType match {
-      case LongType         => expr("timestamp_micros(ts div 1000)")
-      case TimestampNTZType => col("ts").cast(TimestampType)
-      case _                => col("ts")
-    }
-    val stream = spark.readStream.schema(schema)
-      .parquet(s"$sfDir/{events}.parquet")
-      .withColumn("ts", tsCol)
+    val stream = graft.Tables.eventsTs(spark.readStream.schema(schema)
+      .parquet(s"$sfDir/{events}.parquet"))
       .where(col("event_id").isNotNull)
     val agg = EventStreams.hourlyCounts(stream, watermarkDelay = "1 minute")
     val q = agg.writeStream.outputMode(OutputMode.Append)

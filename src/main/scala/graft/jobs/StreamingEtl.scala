@@ -5,12 +5,10 @@ import java.sql.Date
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.model.GithubSchemas
-import graft.sink.{SnapshotSink, SnapshotWriter}
-import graft.source.github.GithubSource
+import graft.sink.SnapshotSink
+import graft.source.github.{GithubDataSource, GithubSource}
 import graft.transform.GithubTransform
 
 /** Streaming ETL: the reference's chunk loop (main.py:871-898)
@@ -108,15 +106,10 @@ object StreamingEtl extends org.apache.spark.internal.Logging {
         snapshotDate
       }
 
-    var reader = spark.readStream.format("graft.source.github.GithubDataSource")
+    val reader = spark.readStream.format("graft.source.github.GithubDataSource")
+      .options(GithubDataSource.encodeOptions(opts))
       .option("repos", repos.mkString(","))
-      .option("apiUrl", opts.apiUrl)
-      .option("chunkSize", opts.chunkSize.toString)
-    opts.token.foreach(t => reader = reader.option("token", t))
-    opts.appId.foreach(id => reader = reader.option("appId", id))
-    opts.privateKeyPem.foreach(k => reader = reader.option("privateKey", k))
-    maxPagesPerTrigger.foreach(pp =>
-      reader = reader.option("maxPagesPerTrigger", pp.toString))
+      .options(maxPagesPerTrigger.map("maxPagesPerTrigger" -> _.toString).toMap)
 
     val runId = graft.sink.BatchCommit.pinnedRunId(fs, cpPath)
     // before any batch runs: reap this run's crashed-publish debris
@@ -132,21 +125,14 @@ object StreamingEtl extends org.apache.spark.internal.Logging {
         // its rows already landed, so appending again would duplicate
         logInfo(s"batch $batchId already appended; skipping replay")
       } else {
-        val typed = batch
-          .select(col("repo"),
-            from_json(col("value"), GithubSchemas.rawPullRequest).as("pr"))
-          .select((col("repo") +: GithubSchemas.rawPullRequest
-            .fieldNames.map(f => col(s"pr.$f"))): _*)
+        val typed = GithubDataSource.typedDocs(batch)
           // each of the four table writes below consumes this frame; a
           // micro-batch is one page per repo, so the cache is small and
           // saves re-parsing the JSON four times
           .persist()
         try {
           val t = GithubTransform.applyMulti(typed, effectiveDate)
-          for ((name, df) <- SnapshotWriter.TableNames.zip(Seq(
-              t.pullRequests, t.commits, t.reviewers, t.comments))) {
-            sink.appendBatch(name, df, runId, batchId)
-          }
+          for ((name, df) <- t.named) sink.appendBatch(name, df, runId, batchId)
           graft.sink.BatchCommit.markCommitted(fs, cpPath, batchId)
           batches += 1
           rows += typed.count()

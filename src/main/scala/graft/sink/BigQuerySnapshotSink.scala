@@ -203,9 +203,7 @@ class BigQuerySnapshotSink(
   // --- load (main.py:641-683) -----------------------------------------
 
   override def writeSnapshot(tables: GithubTables, skipIfEmpty: Boolean): Unit =
-    for ((name, df) <- SnapshotWriter.TableNames.zip(Seq(
-        tables.pullRequests, tables.commits, tables.reviewers, tables.comments)))
-      if (!skipIfEmpty || !df.isEmpty) append(name, df)
+    for ((name, df) <- tables.named if !skipIfEmpty || !df.isEmpty) append(name, df)
 
   override def append(table: String, df: DataFrame): Unit = {
     // one partition in driver memory at a time — never a full collect

@@ -83,7 +83,7 @@ class ParquetSnapshotSink(
     rootDir: String,
     fmt: String = "parquet") extends SnapshotSink {
   override def exists(repo: String, snapshotDate: Date): Boolean =
-    SnapshotWriter.snapshotExists(spark, rootDir, repo, snapshotDate, fmt)
+    SnapshotWriter.snapshotExists(spark, rootDir, repo, snapshotDate)
   override def deleteSnapshot(repo: String, snapshotDate: Date): Unit =
     SnapshotWriter.deleteSnapshot(spark, rootDir, repo, snapshotDate)
   override def writeSnapshot(tables: GithubTables, skipIfEmpty: Boolean): Unit =
@@ -143,21 +143,14 @@ class NdjsonSnapshotSink(
     rootDir: String,
     streamingInserts: Boolean = false) extends SnapshotSink {
 
-  override def exists(repo: String, snapshotDate: Date): Boolean = {
-    val dir = new Path(SnapshotWriter.partitionPath(
-      rootDir, "pull_requests", repo, snapshotDate))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(dir) && fs.listStatus(dir)
-      .exists(s => s.isFile && !s.getPath.getName.startsWith("_"))
-  }
+  override def exists(repo: String, snapshotDate: Date): Boolean =
+    SnapshotWriter.snapshotExists(spark, rootDir, repo, snapshotDate)
 
   override def deleteSnapshot(repo: String, snapshotDate: Date): Unit =
     SnapshotWriter.deleteSnapshot(spark, rootDir, repo, snapshotDate)
 
   override def writeSnapshot(tables: GithubTables, skipIfEmpty: Boolean): Unit =
-    for ((name, df) <- SnapshotWriter.TableNames.zip(Seq(
-        tables.pullRequests, tables.commits, tables.reviewers, tables.comments)))
-      if (!skipIfEmpty || !df.isEmpty) append(name, df)
+    for ((name, df) <- tables.named if !skipIfEmpty || !df.isEmpty) append(name, df)
 
   override def append(table: String, df: DataFrame): Unit = {
     val lines = NdjsonSnapshotSink.jsonLines(df)

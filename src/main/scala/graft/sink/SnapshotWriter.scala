@@ -3,7 +3,7 @@ package graft.sink
 import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.transform.GithubTransform.GithubTables
 
@@ -30,13 +30,8 @@ object SnapshotWriter {
     * Empty inputs are skipped (K5: empty per-table list → skip).
     */
   def write(tables: GithubTables, rootDir: String, skipIfEmpty: Boolean = true,
-      fmt: String = "parquet"): Unit = {
-    val dfs = TableNames.zip(Seq(
-      tables.pullRequests, tables.commits, tables.reviewers, tables.comments))
-    for ((name, df) <- dfs) {
-      writeTable(df, s"$rootDir/$name", skipIfEmpty, fmt)
-    }
-  }
+      fmt: String = "parquet"): Unit =
+    for ((name, df) <- tables.named) writeTable(df, s"$rootDir/$name", skipIfEmpty, fmt)
 
   /** `skipIfEmpty=false` drops the `isEmpty` probe action — writing an
     * empty DataFrame is harmless (no partition directories appear),
@@ -244,30 +239,24 @@ object SnapshotWriter {
     fs.delete(old, true)
   }
 
-  /** S7 existence probe: partition-pruned scan, LIMIT 1 — metadata +
-    * at most one row group touched (main.py:552-601).
+  /** S7 existence probe (main.py:552-601) as one metadata call: does
+    * the (snapshot_date, repo) partition of `pull_requests` hold a data
+    * file? Data files are names starting with neither '_' nor '.', so
+    * a partition holding only commit markers, checksums or staging
+    * debris reads as absent. Format-agnostic: every file-lake sink
+    * lays out the same partition directories.
     */
   def snapshotExists(
       spark: SparkSession,
       rootDir: String,
       repo: String,
-      snapshotDate: Date,
-      fmt: String = "parquet"): Boolean = {
-    val path = s"$rootDir/pull_requests"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) false
-    else try {
-      !spark.read.format(fmt).load(path)
-        .filter(col("snapshot_date") === lit(snapshotDate) &&
-          col("target_repository") === lit(repo))
-        .limit(1)
-        .isEmpty
-    } catch {
-      // dir exists but holds no readable parquet (e.g. a crashed
-      // first write left only _temporary): treat as no snapshot so
-      // the rerun can repair it
-      case _: org.apache.spark.sql.AnalysisException => false
+      snapshotDate: Date): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(
+      partitionPath(rootDir, "pull_requests", repo, snapshotDate))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(dir) && fs.listStatus(dir).exists { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
     }
   }
 }

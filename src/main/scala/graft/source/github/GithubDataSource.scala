@@ -2,10 +2,12 @@ package graft.source.github
 
 import java.util
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter,
   GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -13,6 +15,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
+
+import graft.model.GithubSchemas
 
 /** DataSource V2 GitHub connector: `spark.read.format("github")`.
   *
@@ -45,9 +49,8 @@ import scala.jdk.CollectionConverters._
   *
   * Emits rows `(repo string, value string, state string,
   * created_at string)` where `value` is one
-  * enriched PR document; apply
-  * `from_json(value, GithubSchemas.rawPullRequest)` to get the typed
-  * form (that projection plus GithubTransform is what
+  * enriched PR document; [[GithubDataSource.typedDocs]] gives the
+  * typed form (that projection plus GithubTransform is what
   * [[graft.jobs.EtlJob]] runs).
   */
 class GithubDataSource extends TableProvider with DataSourceRegister {
@@ -79,6 +82,26 @@ object GithubDataSource {
       appId = options.get("appid"),
       privateKeyPem = options.get("privatekey"),
       token = options.get("token"))
+
+  /** Reader-option encoding of [[GithubSource.Options]], the inverse of
+    * [[parseOptions]]: how the batch and streaming ETL jobs hand their
+    * connection settings to `format("github")`.
+    */
+  def encodeOptions(opts: GithubSource.Options): Map[String, String] =
+    Map("apiurl" -> opts.apiUrl, "chunksize" -> opts.chunkSize.toString) ++
+      opts.appId.map("appid" -> _) ++
+      opts.privateKeyPem.map("privatekey" -> _) ++
+      opts.token.map("token" -> _)
+
+  /** The source's `(repo, value, ...)` rows as typed raw PR rows: `repo`
+    * followed by every field of `value` parsed against
+    * [[GithubSchemas.rawPullRequest]] — the input
+    * [[graft.transform.GithubTransform.applyMulti]] expects.
+    */
+  def typedDocs(rows: DataFrame): DataFrame =
+    rows.select(col("repo"), from_json(col("value"), GithubSchemas.rawPullRequest).as("pr"))
+      .select((col("repo") +: GithubSchemas.rawPullRequest.fieldNames
+        .map(f => col(s"pr.$f"))): _*)
 
   /** Reader-option encoding of [[PrScanPrune]] — how the planned
     * pushdown travels from the driver's ScanBuilder to executor-side

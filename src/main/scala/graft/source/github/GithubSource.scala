@@ -1,25 +1,18 @@
 package graft.source.github
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.model.GithubSchemas
-
-/** Driver-side GitHub ingest: pages are pulled sequentially (GitHub
-  * rate limits are per-token, so the reference's strictly sequential
-  * fetch is the correct default — parallel fan-out just multiplies
-  * 403s, SURVEY.md §7.5), parsed against the explicit raw schema, and
-  * handed to Spark as a DataFrame.
+/** Connection settings and extractor wiring shared by every GitHub
+  * read path.
   *
-  * The network-bound extract is deliberately NOT distributed: at
-  * 5 000 requests/hour the API — not Spark — is the bottleneck, and
-  * keeping token minting on the driver avoids shipping credentials to
-  * executors. Everything downstream (transform, dedup, sinks) is
-  * fully distributed; the connector boundary is one
-  * `spark.createDataset` per run of pages.
-  *
-  * For multi-token / multi-repo deployments that CAN parallelize,
-  * [[GithubDataSource]] exposes the same extraction as a DataSource
-  * V2 `format("github")` with one input partition per repo.
+  * Batch ETL extracts through the DataSource V2 scan
+  * ([[GithubDataSource]], `format("github")`): one input partition per
+  * repo, or per page range with `pagesPerPartition`, so repos extract
+  * in parallel while the pages inside one partition are fetched in
+  * order — GitHub rate limits are per token, and parallel fan-out
+  * within one token just multiplies 403s (SURVEY.md §7.5). Each
+  * partition builds its own client through [[openExtractor]], so the
+  * credentials in [[Options]] travel to the executors as reader
+  * options. [[graft.jobs.ChunkedEtl]] walks one repo's pages on the
+  * driver instead, holding one page at a time.
   */
 object GithubSource {
 
@@ -30,17 +23,10 @@ object GithubSource {
       privateKeyPem: Option[String] = None,
       token: Option[String] = None)
 
-  /** All enriched PR docs for `repo` as a typed DataFrame. */
-  def read(spark: SparkSession, repo: String, opts: Options): DataFrame = {
-    import spark.implicits._
-    val jsons = fetchRaw(repo, opts)
-    spark.read.schema(GithubSchemas.rawPullRequest).json(jsons.toDS)
-  }
-
   /** Single wiring point for extractor construction: HTTP client,
     * optional App-auth token manager, current-token state, and the
     * per-page refresh hook (main.py:845-869). Every consumer —
-    * driver-side read, DSv2 partition reader, chunked ETL — goes
+    * DSv2 partition reader, micro-batch stream, chunked ETL — goes
     * through here so auth policy can't drift between them.
     *
     * Returns the extractor and the refreshAuth callback to pass to

@@ -50,7 +50,13 @@ object GithubTransform {
       pullRequests: DataFrame,
       commits: DataFrame,
       reviewers: DataFrame,
-      comments: DataFrame)
+      comments: DataFrame) {
+    /** Each frame with its snapshot table name, in
+      * [[graft.sink.SnapshotWriter.TableNames]] order.
+      */
+    def named: Seq[(String, DataFrame)] = graft.sink.SnapshotWriter.TableNames
+      .zip(Seq(pullRequests, commits, reviewers, comments))
+  }
 
   /** Bug-id extraction (P2): all matches, numeric guard, first
     * survivor. Pure built-in codegen'd expressions.

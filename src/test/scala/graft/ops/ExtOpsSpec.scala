@@ -900,21 +900,22 @@ class ExtOpsSpec extends AnyFunSuite with graft.TempDirs {
     }
   }
 
-  test("chunked ETL: bounded-memory per-page loop equals collect-all mode") {
+  test("chunked ETL: bounded-memory per-page loop, idempotent rerun") {
     val server = new MockGithubServer
     server.start()
     try {
       val out = tempDir("graft-chunked").toString
       val opts = GithubSource.Options(apiUrl = server.url, chunkSize = 3)
+      val sink = new graft.sink.ParquetSnapshotSink(spark, out)
       val stats = graft.jobs.ChunkedEtl.run(
-        spark, "o/r", opts, out, java.sql.Date.valueOf("2024-06-01"))
+        spark, "o/r", opts, sink, java.sql.Date.valueOf("2024-06-01"))
       assert(stats.chunks == 2 && stats.prs == 5)
       assert(spark.read.parquet(s"$out/pull_requests").count() == 4)
       assert(spark.read.parquet(s"$out/commits").count() == 16)
-      // rerun: first chunk's dynamic overwrite clears the partitions,
-      // appends rebuild them — same totals, no duplicates
+      // rerun: the up-front delete clears the partitions, appends
+      // rebuild them — same totals, no duplicates
       val stats2 = graft.jobs.ChunkedEtl.run(
-        spark, "o/r", opts, out, java.sql.Date.valueOf("2024-06-01"))
+        spark, "o/r", opts, sink, java.sql.Date.valueOf("2024-06-01"))
       assert(stats2.chunks == 2)
       assert(spark.read.parquet(s"$out/pull_requests").count() == 4)
       assert(spark.read.parquet(s"$out/commits").count() == 16)

@@ -261,11 +261,14 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
 
   // --- end-to-end: source → transform → snapshot sink -----------------
 
-  test("GithubSource.read + transform produce the four tables") {
+  test("DSv2 read + typedDocs + transform produce the four tables") {
     withServer { server =>
-      val raw = GithubSource.read(spark, "o/r", GithubSource.Options(apiUrl = server.url))
+      val raw = GithubDataSource.typedDocs(spark.read.format("github")
+        .options(GithubDataSource.encodeOptions(GithubSource.Options(apiUrl = server.url)))
+        .option("repos", "o/r")
+        .load())
       assert(raw.count() == 5)
-      val t = GithubTransform(raw, "o/r", Date.valueOf("2024-06-01"))
+      val t = GithubTransform.applyMulti(raw, Date.valueOf("2024-06-01"))
       assert(t.pullRequests.count() == 4) // PR without number dropped
       assert(t.commits.count() == 4L * 2 * 2) // 4 PRs × 2 commits × 2 files
       assert(t.reviewers.count() == 4L * 2)
@@ -472,7 +475,7 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
     }
   }
 
-  test("EtlJob DSv2 mode: multi-repo parallel pass equals per-repo loop") {
+  test("EtlJob default DSv2 pass equals chunked per-repo loop") {
     withServer { server =>
       val outLoop = tempDir("graft-loop").toString
       val outDsv2 = tempDir("graft-dsv2").toString
@@ -480,9 +483,9 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
         "GITHUB_REPOS" -> "o/r1, o/r2",
         "GITHUB_API_URL" -> server.url,
         "GITHUB_TOKEN" -> "t")
-      graft.jobs.EtlJob.run(base + ("GRAFT_OUTPUT_DIR" -> outLoop), Some(spark))
       graft.jobs.EtlJob.run(
-        base + ("GRAFT_OUTPUT_DIR" -> outDsv2) + ("GRAFT_USE_DSV2" -> "1"), Some(spark))
+        base + ("GRAFT_OUTPUT_DIR" -> outLoop) + ("GRAFT_CHUNKED" -> "1"), Some(spark))
+      graft.jobs.EtlJob.run(base + ("GRAFT_OUTPUT_DIR" -> outDsv2), Some(spark))
       for (t <- graft.sink.SnapshotWriter.TableNames) {
         val a = spark.read.parquet(s"$outLoop/$t")
         val b = spark.read.parquet(s"$outDsv2/$t")
@@ -493,33 +496,41 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
     }
   }
 
-  test("reference-scale corpus (250 PRs / 3 pages): plain, chunked, DSv2 agree") {
+  test("reference-scale corpus (250 PRs / 3 pages): default and chunked agree, same requests") {
     // the reference's integration envelope (mock_github_api.py:271-276,
     // 300-359): 250 PRs at the default chunk size of 100 → 3 list
     // pages, seeded 1-20/1-15/0-5/0-10 fan-out, edge cases included
     val server = new MockGithubServer(scalePrs = 250)
     server.start()
     try {
-      val outs = Seq("plain", "chunked", "dsv2")
+      val outs = Seq("default", "chunked")
         .map(m => m -> tempDir(s"graft-$m").toString)
         .toMap
       val base = Map(
         "GITHUB_REPOS" -> "o/r",
         "GITHUB_API_URL" -> server.url,
         "GITHUB_TOKEN" -> "t")
-      graft.jobs.EtlJob.run(base + ("GRAFT_OUTPUT_DIR" -> outs("plain")), Some(spark))
-      graft.jobs.EtlJob.run(
-        base + ("GRAFT_OUTPUT_DIR" -> outs("chunked")) + ("GRAFT_CHUNKED" -> "1"), Some(spark))
-      graft.jobs.EtlJob.run(
-        base + ("GRAFT_OUTPUT_DIR" -> outs("dsv2")) + ("GRAFT_USE_DSV2" -> "1"), Some(spark))
-      val prs = spark.read.parquet(s"${outs("plain")}/pull_requests")
+      // requests one EtlJob run makes: both modes walk the same pages
+      // and enrichment fan-out once, so the default mode's four table
+      // writes must share one extraction
+      def requests(env: Map[String, String]): Int = {
+        val before = server.requestCount.get
+        graft.jobs.EtlJob.run(env, Some(spark))
+        server.requestCount.get - before
+      }
+      val defaultRequests = requests(base + ("GRAFT_OUTPUT_DIR" -> outs("default")))
+      val chunkedRequests = requests(
+        base + ("GRAFT_OUTPUT_DIR" -> outs("chunked")) + ("GRAFT_CHUNKED" -> "1"))
+      assert(defaultRequests == chunkedRequests,
+        s"default mode made $defaultRequests requests, chunked $chunkedRequests")
+      val prs = spark.read.parquet(s"${outs("default")}/pull_requests")
       assert(prs.count() == 245) // 250 minus the five number-less PRs
-      for (t <- SnapshotWriter.TableNames; m <- Seq("chunked", "dsv2")) {
-        val a = spark.read.parquet(s"${outs("plain")}/$t")
-        val b = spark.read.parquet(s"${outs(m)}/$t")
-        assert(a.count() == b.count(), s"row count mismatch for $t in $m mode")
+      for (t <- SnapshotWriter.TableNames) {
+        val a = spark.read.parquet(s"${outs("default")}/$t")
+        val b = spark.read.parquet(s"${outs("chunked")}/$t")
+        assert(a.count() == b.count(), s"row count mismatch for $t")
         assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-          s"content mismatch for $t in $m mode")
+          s"content mismatch for $t")
       }
     } finally server.stop()
   }
