@@ -25,6 +25,16 @@ import graft.transform.GithubTransform
   * (main.py:673-677). Dynamic overwrite alone is not enough here —
   * a table empty in the first chunk would never clear its stale
   * partition on rerun.
+  *
+  * Each chunk costs four Spark jobs, one append per table, which the
+  * sink may run concurrently ([[SnapshotSink.appendChunk]]): the page
+  * is parsed into a single input partition, so each append is one task
+  * and writes one file per (snapshot_date, repo) partition, and no
+  * emptiness probe runs (an empty append writes nothing). The closing
+  * `finalizeSnapshot` compacts a table's partition only where a reader
+  * would pay for its files: when they overflow one maximal read split
+  * ([[graft.sink.SnapshotWriter.compactionPays]]). A load of a few
+  * chunks is left as written; one of many chunks is merged.
   */
 object ChunkedEtl {
 
@@ -46,14 +56,13 @@ object ChunkedEtl {
     var prs = 0L
     extractor.pages(repo, opts.chunkSize, refreshAuth).foreach { chunk =>
       val raw: DataFrame = spark.read
-        .schema(GithubSchemas.rawPullRequest).json(chunk.toDS)
-      val tables = GithubTransform(raw, repo, snapshotDate)
-      for ((name, df) <- tables.named) sink.append(name, df)
+        .schema(GithubSchemas.rawPullRequest).json(chunk.toDS).coalesce(1)
+      sink.appendChunk(GithubTransform(raw, repo, snapshotDate))
       chunks += 1
       prs += chunk.size
     }
-    // merge the one-file-per-chunk-per-task debris this loop creates
-    // (no-op for warehouse sinks, and for partitions already compact)
+    // merge the one-file-per-chunk files this loop leaves, where they
+    // cost a reader more than one split (no-op for warehouse sinks)
     sink.finalizeSnapshot(repo, snapshotDate)
     ChunkStats(chunks, prs)
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sink.SnapshotWriter
+
 import Similarity.IvfPqResidualIndex
 
 /** Persistence + amortization for ANN index artifacts.
@@ -25,46 +27,21 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
 
   private val Marker = "_built"
 
-  /** The three table writes are INDEPENDENT Spark jobs (different
-    * frames, different target directories), so they run concurrently
-    * from a small thread pool — the optimization-guide overlap
-    * discipline: the two codebook tables are k-row/driver-side-tiny
-    * and their whole cost is per-job scheduling + commit latency,
-    * which now hides under the corpus-sized codes write instead of
-    * serializing in front of it (measured 1.54 s → 0.9 s per publish
-    * at sf0.1). Crash safety is untouched: the commit marker still
-    * lands only after ALL three writes return, and the guarded build
-    * path publishes the whole directory via tmp + atomic rename.
-    */
-  private def writeAll(writes: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
-    try {
-      val futs = writes.map(w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
-        }))
-      // await EVERY write (success or failure) before surfacing the
-      // first error: rethrowing early would hand control back to the
-      // caller's cleanup (buildGuarded deletes the staging dir) while
-      // a sibling write job is still emitting task output into it
-      val errs = futs.flatMap { f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-          case e: InterruptedException => Some(e)
-        }
-      }
-      errs.headOption.foreach(throw _)
-    } finally { pool.shutdown(); () }
-  }
-
+  // The three table writes are INDEPENDENT Spark jobs (different
+  // frames, different target directories), so they run concurrently:
+  // the two codebook tables are k-row/driver-side-tiny and their whole
+  // cost is per-job scheduling + commit latency, which hides under the
+  // corpus-sized codes write instead of serializing in front of it
+  // (measured 1.54 s → 0.9 s per publish at sf0.1). Crash safety is
+  // untouched: the commit marker still lands only after ALL three
+  // writes return, and the guarded build path publishes the whole
+  // directory via tmp + atomic rename.
   def save(index: IvfPqResidualIndex, path: String): Unit = {
     val spark = index.codes.sparkSession
     val fs = new Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(path, Marker), false)
-    writeAll(Seq(
+    SnapshotWriter.writeAll(Seq(
       () => index.centroids.write.mode("overwrite")
         .parquet(s"$path/centroids"),
       () => index.subCodebook.write.mode("overwrite")
@@ -94,7 +71,7 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
     val fs = new Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(path, Marker), false)
-    writeAll(Seq(
+    SnapshotWriter.writeAll(Seq(
       () => index.centroids.write.mode("overwrite")
         .parquet(s"$path/centroids"),
       () => index.subCodebook.write.mode("overwrite")

@@ -17,7 +17,9 @@ import graft.transform.GithubTransform.GithubTables
   *    crashed run repairs it (main.py:604-638);
   *  - loads are append-shaped (WRITE_APPEND, main.py:673-677), so the
   *    delete-then-append ORDER is what makes runs idempotent;
-  *  - `exists` is the informational probe (main.py:552-601).
+  *  - `exists` is the informational probe (main.py:552-601);
+  *  - `appendChunk` returns only after all of a chunk's appends
+  *    finished, so appends to one table never overlap.
   *
   * [[ParquetSnapshotSink]] is the local/object-store implementation;
   * [[NdjsonSnapshotSink]] speaks the reference's BigQuery wire shape
@@ -35,8 +37,19 @@ trait SnapshotSink {
     */
   def writeSnapshot(tables: GithubTables, skipIfEmpty: Boolean = true): Unit
 
-  /** WRITE_APPEND one chunk of `table` (ChunkedEtl's per-page load). */
+  /** WRITE_APPEND one chunk of `table`. */
   def append(table: String, df: DataFrame): Unit
+
+  /** WRITE_APPEND one chunk of all four tables (ChunkedEtl's per-page
+    * load). Returns only once every table's append has finished, so
+    * appends to one table never overlap: the next chunk's append to a
+    * path starts after this chunk's append to it returned. The default
+    * calls [[append]] once per table, in table order, on the calling
+    * thread; a sink may run the four appends concurrently (they target
+    * four different tables), as [[ParquetSnapshotSink]] does.
+    */
+  def appendChunk(tables: GithubTables): Unit =
+    tables.named.foreach { case (name, df) => append(name, df) }
 
   /** Append one streaming micro-batch such that a crash-replay of the
     * same (runId, batchId) does NOT duplicate rows. File-lake sinks
@@ -51,7 +64,8 @@ trait SnapshotSink {
   /** Post-load maintenance for the (snapshot_date, repo) pair this
     * run touched. Default no-op — warehouse sinks (BigQuery et al.)
     * manage their own storage; file-lake sinks override to merge the
-    * per-chunk small files chunked loading leaves behind.
+    * per-chunk small files chunked loading leaves behind, where a
+    * reader would pay for them.
     */
   def finalizeSnapshot(repo: String, snapshotDate: Date): Unit = ()
 
@@ -89,14 +103,27 @@ class ParquetSnapshotSink(
   override def writeSnapshot(tables: GithubTables, skipIfEmpty: Boolean): Unit =
     SnapshotWriter.write(tables, rootDir, skipIfEmpty, fmt)
   override def append(table: String, df: DataFrame): Unit =
-    SnapshotWriter.appendTable(df, s"$rootDir/$table", fmt = fmt)
+    SnapshotWriter.appendTable(df, s"$rootDir/$table", fmt)
+  /** The four appends run concurrently ([[SnapshotWriter.writeAll]]),
+    * each through [[append]], so a subclass overriding `append` must
+    * be thread-safe.
+    */
+  override def appendChunk(tables: GithubTables): Unit =
+    SnapshotWriter.writeAll(tables.named.map { case (name, df) => () => append(name, df) })
   override def appendBatch(table: String, df: DataFrame, runId: String,
       batchId: Long): Unit =
     SnapshotWriter.appendTableBatch(df, s"$rootDir/$table", runId, batchId, fmt)
+  /** Compacts the (snapshot_date, repo) partition of each table whose
+    * files would cost a reader more than one read split
+    * ([[SnapshotWriter.compactionPays]]), those tables concurrently.
+    * A chunked load of a few chunks leaves a few small files per
+    * partition and rewrites nothing; one of many chunks is merged.
+    */
   override def finalizeSnapshot(repo: String, snapshotDate: Date): Unit =
-    for (table <- SnapshotWriter.TableNames)
-      SnapshotWriter.compactPartition(spark, rootDir, table, repo, snapshotDate,
-        fmt = fmt)
+    SnapshotWriter.writeAll(SnapshotWriter.TableNames
+      .filter(SnapshotWriter.compactionPays(spark, rootDir, _, repo, snapshotDate))
+      .map(table => () => SnapshotWriter.compactPartition(spark, rootDir, table, repo,
+        snapshotDate, fmt = fmt)))
   override def sweepBatchDebris(checkpointDir: String): Unit =
     for (table <- SnapshotWriter.TableNames)
       BatchCommit.sweepOrphans(spark, s"$rootDir/$table", checkpointDir)

@@ -124,20 +124,48 @@ object SnapshotWriter {
   }
 
   /** Per-chunk append (reference WRITE_APPEND, main.py:673-677): used
-    * by ChunkedEtl after the up-front deleteSnapshot.
-    * `skipIfEmpty=false` for callers whose batches are expensive to
-    * recompute (the streaming bridge: an isEmpty probe is an extra
-    * Spark job per micro-batch, while appending an empty frame is
-    * harmless — no partition directories appear).
+    * by ChunkedEtl after the up-front deleteSnapshot. One Spark job,
+    * with no emptiness probe: appending an empty frame is harmless (no
+    * partition directory appears), while a probe would be a second job
+    * that re-parses and re-transforms the chunk.
     */
-  def appendTable(df: DataFrame, path: String, skipIfEmpty: Boolean = true,
-      fmt: String = "parquet"): Unit =
-    if (!skipIfEmpty || !df.isEmpty) {
-      df.write
-        .mode("append")
-        .partitionBy("snapshot_date", "target_repository")
-        .format(fmt).save(path)
-    }
+  def appendTable(df: DataFrame, path: String, fmt: String = "parquet"): Unit =
+    df.write
+      .mode("append")
+      .partitionBy("snapshot_date", "target_repository")
+      .format(fmt).save(path)
+
+  /** Run independent writes (different frames, different target
+    * directories) concurrently from a small thread pool, so the
+    * per-job scheduling and commit latency of the small ones hides
+    * under the largest. Returns only after EVERY write has finished,
+    * successfully or not, and then rethrows the first error: returning
+    * early would hand control to the caller's cleanup, or to its next
+    * write into the same directory, while a sibling job is still
+    * emitting task output there. Callers must never pass two writes to
+    * the same path: they would share the committer's `_temporary` dir.
+    */
+  def writeAll(writes: Seq[() => Unit]): Unit = writes match {
+    case Seq() => ()
+    case Seq(w) => w()
+    case _ =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
+      try {
+        val futs = writes.map(w =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = w()
+          }))
+        val errs = futs.flatMap { f =>
+          try { f.get(); None }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Some(Option(e.getCause).getOrElse(e))
+            case e: InterruptedException => Some(e)
+          }
+        }
+        errs.headOption.foreach(throw _)
+      } finally { pool.shutdown(); () }
+  }
 
   /** Exactly-once per-micro-batch append: [[BatchCommit.stageAndPublish]]
     * keyed by (runId, batchId), so a crash-replayed foreachBatch body
@@ -237,6 +265,36 @@ object SnapshotWriter {
       throw new java.io.IOException(s"compaction swap failed for $dir")
     }
     fs.delete(old, true)
+  }
+
+  /** Whether [[compactPartition]] pays for this partition: true when
+    * its data files, each charged Spark's per-file open cost
+    * (`spark.sql.files.openCostInBytes`), overflow one maximal read
+    * split (`spark.sql.files.maxPartitionBytes`), i.e.
+    * Σ(length + openCost) > maxPartitionBytes. Below that a reader
+    * pays at most one split's worth for the extra files, less than
+    * the rewrite costs. Also true when a crashed compaction swap left
+    * its hidden pre-compaction copy behind, so that compactPartition
+    * restores or reaps it. Metadata calls only, no Spark job.
+    */
+  def compactionPays(
+      spark: SparkSession,
+      rootDir: String,
+      table: String,
+      repo: String,
+      snapshotDate: Date): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(partitionPath(rootDir, table, repo, snapshotDate))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sessionState.conf
+    fs.exists(new org.apache.hadoop.fs.Path(dir.getParent, s".compact_old_${dir.getName}")) ||
+      fs.exists(dir) && {
+        val files = fs.listStatus(dir).filter { s =>
+          val name = s.getPath.getName
+          s.isFile && !name.startsWith("_") && !name.startsWith(".")
+        }
+        files.length > 1 &&
+          files.map(_.getLen + conf.filesOpenCostInBytes).sum > conf.filesMaxPartitionBytes
+      }
   }
 
   /** S7 existence probe (main.py:552-601) as one metadata call: does

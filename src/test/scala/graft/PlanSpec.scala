@@ -32,6 +32,18 @@ class PlanSpec extends AnyFunSuite {
   def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  /** Every registered query, built once for both GLOBAL audits. Each
+    * plan is forced right after its query is built, as a per-audit
+    * rebuild would do, so a later query's session side effects (cache
+    * clears, temp views) cannot change an earlier query's plan.
+    */
+  lazy val allPlans: Seq[(String, org.apache.spark.sql.execution.QueryExecution)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, sf).queryExecution
+      qe.executedPlan
+      name -> qe
+    }
+
   test("github transform pipelines have zero exchanges (shuffle-free)") {
     import spark.implicits._
     val raw = spark.read.schema(GithubSchemas.rawPullRequest)
@@ -455,8 +467,8 @@ class PlanSpec extends AnyFunSuite {
       "q_tpch_q22", // 1-row (sum_cents, n_pos) scalar-average broadcast
       "q_naive_bayes") // vocab × class-params and test-doc × class
       // skeleton crosses — the class frame is a tiny broadcast
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val p = fn(spark, sf).queryExecution.executedPlan.toString
+    for ((name, qe) <- allPlans) {
+      val p = qe.executedPlan.toString
       assert(!p.contains("CartesianProduct"),
         s"$name plans a CartesianProduct:\n$p")
       if (!bnlAllowed.contains(name))
@@ -541,8 +553,8 @@ class PlanSpec extends AnyFunSuite {
       "q_map_eval", // rank/cumsum windows AFTER the top-20 limit
       "q_sprt") // cumulative window over the calendar-bounded
       // daily frame (one row per day WITH data)
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val partitionless = fn(spark, sf).queryExecution.optimizedPlan.collect {
+    for ((name, qe) <- allPlans) {
+      val partitionless = qe.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.partitionSpec.isEmpty => w
       }.nonEmpty

@@ -202,6 +202,140 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
     assert(!fs.exists(dir), "deleted snapshot resurrected from crash debris")
   }
 
+  /** Job ids with the short call site of their last stage, as a
+    * listener sees them (e.g. `save at SnapshotWriter.scala:140`).
+    */
+  class JobLog extends org.apache.spark.scheduler.SparkListener {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.add(e.stageInfos.maxBy(_.stageId).name)
+    def size: Int = { org.apache.spark.ListenerBusAccess.drain(spark.sparkContext); jobs.size }
+  }
+
+  def chunkedRun(sink: SnapshotSink, server: graft.source.github.MockGithubServer)
+      : graft.jobs.ChunkedEtl.ChunkStats =
+    graft.jobs.ChunkedEtl.run(spark, "o/r",
+      graft.source.github.GithubSource.Options(apiUrl = server.url, chunkSize = 3), sink, d1)
+
+  /** Every row of the four tables, as sorted strings: equal lists mean
+    * equal contents with equal multiplicities.
+    */
+  def snapshotRows(root: String): Seq[Seq[String]] =
+    SnapshotWriter.TableNames.map(t =>
+      spark.read.parquet(s"$root/$t").collect().map(_.toString).toSeq.sorted)
+
+  test("chunked load: four append jobs per chunk, none in finalizeSnapshot") {
+    val server = new graft.source.github.MockGithubServer
+    server.start()
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val perChunk = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var finalizeJobs = -1
+      val sink = new ParquetSnapshotSink(spark, tempDir("chunkjobs").toString) {
+        override def appendChunk(tables: GithubTables): Unit = {
+          val before = log.size
+          super.appendChunk(tables)
+          perChunk += log.size - before
+        }
+        override def finalizeSnapshot(repo: String, snapshotDate: Date): Unit = {
+          val before = log.size
+          super.finalizeSnapshot(repo, snapshotDate)
+          finalizeJobs = log.size - before
+        }
+      }
+      val before = log.size
+      assert(chunkedRun(sink, server).chunks == 2)
+      assert(perChunk == Seq(4, 4), s"jobs per chunk: $perChunk")
+      assert(finalizeJobs == 0, s"finalizeSnapshot ran $finalizeJobs jobs")
+      val sinkJobs = log.jobs.toArray.drop(before).map(_.toString)
+        .filter(n => n.contains("SnapshotWriter.scala") || n.contains("SnapshotSink.scala"))
+      assert(sinkJobs.length == 8, sinkJobs.mkString(", "))
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      server.stop()
+    }
+  }
+
+  test("chunked load: a failed concurrent append stops the run with no job left running") {
+    val server = new graft.source.github.MockGithubServer
+    server.start()
+    try {
+      val clean = tempDir("chunkclean").toString
+      chunkedRun(new ParquetSnapshotSink(spark, clean), server)
+      val root = tempDir("chunkcrash").toString
+      // chunk 2's comments append is slow (its write job sleeps per
+      // row), so it is still running when the commits append fails
+      val slowRow = org.apache.spark.sql.functions
+        .udf(() => { Thread.sleep(1000); true }).asNondeterministic()
+      val chunk = new java.util.concurrent.atomic.AtomicInteger(0)
+      val failing = new ParquetSnapshotSink(spark, root) {
+        override def appendChunk(tables: GithubTables): Unit = {
+          chunk.incrementAndGet()
+          super.appendChunk(tables)
+        }
+        override def append(table: String, df: DataFrame): Unit =
+          (table, chunk.get) match {
+            case ("commits", 2) => throw new IllegalStateException("injected failure in chunk 2")
+            case ("comments", 2) => super.append(table, df.where(slowRow()))
+            case _ => super.append(table, df)
+          }
+      }
+      intercept[IllegalStateException](chunkedRun(failing, server))
+      // a sibling append still writing into its table would show here
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+        "the run returned while a sibling append was still running")
+      // the rerun's up-front delete clears the partial chunk 2
+      chunkedRun(new ParquetSnapshotSink(spark, root), server)
+      assert(snapshotRows(root) == snapshotRows(clean), "rerun differs from a clean run")
+    } finally server.stop()
+  }
+
+  test("finalizeSnapshot compacts only where the files overflow one read split") {
+    val root = tempDir("compactpolicy").toString
+    val sink = new ParquetSnapshotSink(spark, root)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    for (chunk <- 1 to 4) sink.append("commits", rows("o/r", d1, s"c$chunk"))
+    def partFiles: Int = fs.listStatus(new org.apache.hadoop.fs.Path(
+      SnapshotWriter.partitionPath(root, "commits", "o/r", d1)))
+      .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    val files = partFiles
+    assert(files >= 4)
+    val before = readBack("parquet", root, "commits")
+    // four small files fit one 128 MB split with their open cost: kept
+    sink.finalizeSnapshot("o/r", d1)
+    assert(partFiles == files, "finalize rewrote a partition that fits one split")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1m")
+    try sink.finalizeSnapshot("o/r", d1)
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(partFiles == 1, "finalize left a partition that overflows one split")
+    assert(readBack("parquet", root, "commits") == before, "compaction changed the rows")
+  }
+
+  test("appendChunk with an empty table writes no partition for it") {
+    for ((kind, mk) <- Seq[(String, String => SnapshotSink)](
+        ("parquet", r => new ParquetSnapshotSink(spark, r)),
+        ("orc", r => new OrcSnapshotSink(spark, r)),
+        ("ndjson", r => new NdjsonSnapshotSink(spark, r)))) {
+      val root = tempDir(s"emptychunk-$kind").toString
+      val full = rows("o/r", d1, "x")
+      mk(root).appendChunk(GithubTables(full, full, full.limit(0), full))
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        SnapshotWriter.partitionPath(root, "reviewers", "o/r", d1))),
+        s"[$kind] empty reviewers frame created a partition")
+      for (t <- Seq("pull_requests", "commits", "comments"))
+        assert(readBack(kind, root, t) == Set((1L, "x", "o/r"), (2L, "x", "o/r")),
+          s"[$kind] $t lost rows")
+    }
+  }
+
   test("crash-replayed micro-batch appends no duplicate rows (every crash point)") {
     val root = tempDir("batchappend").toString
     val path = s"$root/pull_requests"
