@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
 
 /** Benchmark main: every SparkEntry query timed on
@@ -10,8 +12,43 @@ import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
   * stdout AND written to `SPARK_GRAFT_BENCH_OUT` (default
   * `bench_out.json`) — sbt wraps stdout in `[info]` noise, so the
   * file is the machine-readable copy.
+  *
+  * The object also holds the one runner every measurement main goes
+  * through: session, timed action, sentinel and boundary cache clear.
+  * (Here, not in BenchGuard: it collects, and library code never
+  * collects — StyleSpec-gated.)
   */
 object Bench {
+
+  /** The harness session: [[GraftSession]] on `local[SPARK_GRAFT_CPUS]`
+    * with `SPARK_GRAFT_SHUFFLE` shuffle partitions; both default to the
+    * JVM's available processors. Explain audits the plans of this same
+    * session, so they are the plans Bench and Verify run.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cpus)
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", shuffle)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The timed action: build the frame, then hash ALL its output
+    * columns, `max` the hash and collect. A bare count() would let
+    * Catalyst prune the very expressions being measured (and hide
+    * their errors), degenerating projection-only queries to row
+    * counts. Returns the seconds and the executed plan (after AQE
+    * finalized it for this run).
+    */
+  def timed(build: => DataFrame): (Double, SparkPlan) = {
+    val t0 = System.nanoTime()
+    val out = build
+    val hashed = out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
+      .agg(max("h"))
+    hashed.collect()
+    ((System.nanoTime() - t0) / 1e9, hashed.queryExecution.executedPlan)
+  }
 
   /** The window-health sentinel job — ONE definition shared by Bench
     * and ScaleBench, because the job IS the cross-harness
@@ -19,10 +56,8 @@ object Bench {
     * the two mains' sentinel ratios silently stop meaning the same
     * thing. A fixed ~sub-second generated-data shuffle+agg: no IO
     * variance, exercises task scheduling + codegen + one exchange.
-    * (Lives in this CLI main, not BenchGuard: it collects, and library
-    * code never collects — StyleSpec-gated.)
     */
-  def sentinelOnce(spark: org.apache.spark.sql.SparkSession): Double = {
+  def sentinelOnce(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     spark.range(0, 20000000L, 1, 32)
       .selectExpr("pmod(xxhash64(id), 997) AS k", "xxhash64(id, 7) AS v")
@@ -31,9 +66,31 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** A sentinel reading: the median of three, not a single shot — a
+    * lone reading right after a heavy query inherits its async
+    * cleanup (the bisected sweep-noise mechanism) and would smear the
+    * very signal it anchors.
+    */
+  def sentinel(spark: SparkSession): Double =
+    BenchGuard.median(Seq.fill(3)(sentinelOnce(spark)))
+
+  /** Clear the session cache at a query boundary and report whether
+    * it is still non-empty (1) or not (0). Query-scoped persists park
+    * in the CacheManager until explicit unpersist, and most queries
+    * persist frames whose consumers live in the RETURNED lazy plan —
+    * an in-function unpersist would defeat the persist, so the harness
+    * owns the lifecycle. The emptiness check is an INVARIANT assertion
+    * (clearCache drains the same CacheManager it inspects, so a
+    * non-zero count means the clear itself broke — e.g. an API
+    * change), not a litter detector.
+    */
+  def clearCacheBoundary(spark: SparkSession): Int = {
+    spark.catalog.clearCache()
+    if (spark.sharedState.cacheManager.isEmpty) 0 else 1
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     // a BENCH_ONLY subset run must not overwrite the committed full
     // sweep: bench_out.json doubles as the next run's regression
@@ -44,60 +101,31 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "bench_out.subset.json"
       else "bench_out.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // absorb session/codegen warmup so the first timed query isn't
     // charged for JVM startup
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // failed queries report -1 (NOT a fast success) and are excluded
-    // from the total, with the error on stderr. The timed action sums
-    // a hash over ALL output columns: a bare count() would let
-    // Catalyst prune the very expressions being benchmarked (and hide
-    // their errors), degenerating projection-only queries to row
-    // counts.
-    // Cache hygiene (r11 verdict #1): query-scoped persists park in
-    // the session CacheManager until explicit unpersist, and most
-    // queries persist frames whose consumers live in the RETURNED
-    // lazy plan — an in-function unpersist would defeat the persist,
-    // so the harness owns the lifecycle instead: the cache is cleared
-    // at every QUERY boundary (and after every isolated re-measure).
-    // That stops (a) cached blocks accumulating across a 333-query
-    // × 3-run sweep — the most plausible mechanism for r11's
-    // unflagged mid-sweep 6–85× anomaly block — and (b) identical
-    // subtrees in a LATER query silently reusing an earlier query's
-    // cache. Runs 2–3 of the SAME query stay warm deliberately:
-    // clearing per run was measured at +2–4.5× on persist-carrying
-    // queries (q_minhash_recall 0.62→2.78 s), which would read as
-    // fake regressions against every prior round's warm-median
-    // baselines; SPARK_GRAFT_BENCH_COLD=1 opts into per-run clearing
-    // for cold-path measurement.
+    // from the total, with the error on stderr. Cache hygiene (r11
+    // verdict #1): the cache is cleared at every QUERY boundary (and
+    // after every isolated re-measure). That stops (a) cached blocks
+    // accumulating across a 333-query × 3-run sweep — the most
+    // plausible mechanism for r11's unflagged mid-sweep 6–85× anomaly
+    // block — and (b) identical subtrees in a LATER query silently
+    // reusing an earlier query's cache. Runs 2–3 of the SAME query
+    // stay warm deliberately: clearing per run was measured at
+    // +2–4.5× on persist-carrying queries (q_minhash_recall
+    // 0.62→2.78 s), which would read as fake regressions against every
+    // prior round's warm-median baselines; SPARK_GRAFT_BENCH_COLD=1
+    // opts into per-run clearing for cold-path measurement. The
+    // boundary's leak count ships in the artifact so a violated
+    // invariant is visible there, not only on stderr.
     val coldRuns = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
-    def timeOnce(
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+    def timeOnce(fn: (SparkSession, String) => DataFrame): Double = {
       if (coldRuns) spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val out = fn(spark, sfDir)
-      out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
-        .agg(max("h")).collect()
-      (System.nanoTime() - t0) / 1e9
+      timed(fn(spark, sfDir))._1
     }
-    // clear + assert at a query boundary. The emptiness check is an
-    // INVARIANT assertion (clearCache drains the same CacheManager it
-    // inspects, so a non-zero count means the clear itself broke —
-    // e.g. an API change), not a litter detector: per-query persist
-    // litter is expected and is exactly what the clear removes. The
-    // count ships in the artifact so a violated invariant is visible
-    // there, not only on stderr.
-    def clearCacheBoundary(): Int = {
-      spark.catalog.clearCache()
-      if (spark.sharedState.cacheManager.isEmpty) 0 else 1
-    }
-    def median(xs: Seq[Double]): Double = BenchGuard.median(xs)
     // Window-health sentinel (Bench.sentinelOnce — one definition
     // shared with ScaleBench), timed at sweep start, sweep end, and
     // immediately before every isolated re-measure. The r9 driver
@@ -107,9 +135,8 @@ object Bench {
     // check, and the guard "confirms" pure machine weather (21 false
     // confirms, judge re-measured all clean). Every isolated reading
     // is now anchored to the sentinel taken next to it.
-    def sentinelOnce(): Double = Bench.sentinelOnce(spark)
-    sentinelOnce() // its own codegen warmup
-    val sentinelBase = median((1 to 3).map(_ => sentinelOnce()))
+    sentinelOnce(spark) // its own codegen warmup
+    val sentinelBase = sentinel(spark)
     // optional comma-separated subset for isolated measurements
     // (pollution bisection: a query that is fast alone but slow in the
     // full sweep is being slowed by an earlier query's session litter)
@@ -118,10 +145,8 @@ object Bench {
     // Mid-sweep sentinel trace (r11 verdict #3): the start/end
     // sentinel pair can't see degradation INSIDE the window — r11's
     // driver sweep read a contiguous 6–85× anomaly block mid-sweep
-    // between two healthy endpoints. A median-of-3 untimed reading
-    // every `SentinelEvery` queries (median, not a single shot — a
-    // lone reading right after a heavy query inherits its async
-    // cleanup, the ScaleBench lesson; ≈20 s per full sweep) makes any
+    // between two healthy endpoints. A `sentinel` reading every
+    // `SentinelEvery` queries (≈20 s per full sweep) makes any
     // such block attributable post-hoc from the artifact alone: a
     // trace spike next to it is machine weather, a flat trace is plan
     // or pollution.
@@ -133,15 +158,15 @@ object Bench {
     val results: Seq[(String, Double)] =
       toRun.zipWithIndex.map { case ((name, fn), i) =>
         if (i % SentinelEvery == 0)
-          sentinelTrace += median((1 to 3).map(_ => sentinelOnce()))
+          sentinelTrace += sentinel(spark)
         val r =
-          try name -> median((1 to runs).map(_ => timeOnce(fn)))
+          try name -> BenchGuard.median(Seq.fill(runs)(timeOnce(fn)))
           catch {
             case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
               name -> -1.0
           }
-        cacheLeaks += clearCacheBoundary()
+        cacheLeaks += clearCacheBoundary(spark)
         r
       }
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -211,7 +236,7 @@ object Bench {
     }
     // sweep-end sentinel: with the start reading it bounds how much
     // the machine drifted across the sweep, independent of any flags
-    val sentinelEnd = median((1 to 3).map(_ => sentinelOnce()))
+    val sentinelEnd = sentinel(spark)
     val sentinelDriftRaw = if (sentinelBase > 0) sentinelEnd / sentinelBase else 1.0
 
     /** Render + ship one artifact state: the full one-line JSON
@@ -337,9 +362,9 @@ object Bench {
       // finally, so a thrown re-measure (adjudicate records iso = -1)
       // can't leak its half-built caches into the NEXT flag's
       // isolated reading
-      try median((1 to isolatedRuns).map(_ => timeOnce(fn)))
-      finally cacheLeaks += clearCacheBoundary()
-    }, sentinel = sentinelOnce _, sentinelBase = sentinelBase,
+      try BenchGuard.median(Seq.fill(isolatedRuns)(timeOnce(fn)))
+      finally cacheLeaks += clearCacheBoundary(spark)
+    }, sentinel = () => sentinelOnce(spark), sentinelBase = sentinelBase,
       deadline = adjDeadline, costFactor = isolatedRuns.toDouble)
     // degraded = the machine was measurably slower at sweep end or at
     // any flag's re-measure than at sweep start. In a degraded window

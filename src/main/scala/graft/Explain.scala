@@ -1,26 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan for every
   * registered query (arg: sfDir, default sf0.001) and for the GitHub
   * transform pipelines over a tiny in-memory fixture. Used to check
   * scan pushdown (PushedFilters/ReadSchema), broadcast vs shuffle
   * joins, and WholeStageCodegen coverage — the 100 TB design gates.
+  * The plans come from the harness session ([[Bench.session]]), so
+  * they are the plans Bench and Verify run.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
 
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_ == name)) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
-
 /** Measurement-instability probe: run ONE registered query N times in
   * one session and print every individual timing (not a median), the
   * sentinel reading between runs, and the formatted plan of the first
@@ -20,12 +18,7 @@ object QueryProbe {
     val sfDir = args.drop(2).headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     val fn = SparkEntry.queries(name)
     // normalize away per-session noise (expression ids, plan ids,
     // codegen ids, subquery ids) so only genuine SHAPE differences —
@@ -41,14 +34,9 @@ object QueryProbe {
     val plans = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     for (i <- 1 to runs) {
       val s0 = Bench.sentinelOnce(spark)
-      val t0 = System.nanoTime()
-      val out = fn(spark, sfDir)
-      val timed = out.select(
-        xxhash64(struct(out.columns.map(col): _*)).as("h")).agg(max("h"))
-      timed.collect()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, plan) = Bench.timed(fn(spark, sfDir))
       // the EXECUTED plan, after AQE finalized it for this run
-      val executed = normalize(timed.queryExecution.executedPlan.toString)
+      val executed = normalize(plan.toString)
       plans(executed) = plans.getOrElse(executed, 0) + 1
       val variant = plans.keys.toSeq.indexOf(executed)
       println(f"[probe] $name run $i%2d: $sec%8.3f s " +

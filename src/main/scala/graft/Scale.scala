@@ -34,9 +34,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/scaledata/x10")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     val docs = Tables.documents(spark, src)
     val nDocs = docs.agg(max("doc_id")).head.getLong(0) + 1
@@ -100,8 +98,7 @@ object ScaleGen {
 
 /** Times the heavy operator family on two directories (1× and the
   * [[ScaleGen]] blow-up) and prints per-op medians and the wall-time
-  * ratio. Timed action = hash-agg over every output column (the
-  * Bench.timeOnce discipline: nothing prunable, errors surface).
+  * ratio, each through [[Bench.timed]].
   */
 object ScaleBench {
   import graft.ops.{Dedup, Graphs, Similarity, SubstrDedup, Winnow}
@@ -196,50 +193,34 @@ object ScaleBench {
     val huge = args.lift(2) // optional x100 dir → second slope decade
     val runs = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
-    def timeOnce(fn: (SparkSession, String) => DataFrame, d: String): Double = {
-      val t0 = System.nanoTime()
-      val out = fn(spark, d)
-      out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
-        .agg(max("h")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = BenchGuard.median(xs)
-    // the Bench window-health sentinel (Bench.sentinelOnce — one
-    // shared definition, or the two harnesses' ratios stop being
-    // comparable), applied to the slope table too: the r9 triangles
-    // reading (4.46x in-sweep vs 2.53x isolated) showed slopes inherit
-    // window degradation — each op row carries the machine-health
-    // ratio at its measurement time so a ratio taken in a degraded
-    // stretch is legible as such
-    def sentinelOnce(): Double = Bench.sentinelOnce(spark)
-    sentinelOnce() // codegen warmup
-    val sentinelBase = median((1 to 3).map(_ => sentinelOnce()))
+    def time(fn: (SparkSession, String) => DataFrame, d: String): Double =
+      BenchGuard.median(Seq.fill(runs)(Bench.timed(fn(spark, d))._1))
+    // the Bench window-health sentinel (one shared definition, or the
+    // two harnesses' ratios stop being comparable), applied to the
+    // slope table too: the r9 triangles reading (4.46x in-sweep vs
+    // 2.53x isolated) showed slopes inherit window degradation — each
+    // op row carries the machine-health ratio at its measurement time
+    // so a ratio taken in a degraded stretch is legible as such
+    Bench.sentinelOnce(spark) // codegen warmup
+    val sentinelBase = Bench.sentinel(spark)
 
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val rows = ops.filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-        // median of 3: a single reading taken right after a heavy op
-        // inherits that op's async cleanup (the bisected sweep-noise
-        // mechanism) and would smear the very signal it anchors
-        val sent = median((1 to 3).map(_ => sentinelOnce())) / sentinelBase
-        val t1 = median((1 to runs).map(_ => timeOnce(fn, base)))
-        val t10 = median((1 to runs).map(_ => timeOnce(fn, big)))
+        val sent = Bench.sentinel(spark) / sentinelBase
+        val t1 = time(fn, base)
+        val t10 = time(fn, big)
         val r = t10 / t1
         // the x100 decade: only the cheapest heavy ops, and the ratio
         // that matters is t100/t10 (another 10× step) — ≤ ~linear in
         // the second decade is the 100 TB evidence the x10 row alone
         // can't give
         val t100 = huge.filter(_ => secondDecadeOps.contains(name))
-          .map(h => median((1 to runs).map(_ => timeOnce(fn, h))))
+          .map(h => time(fn, h))
         val x100Json = t100.map(t =>
           f""","t100":$t%.2f,"ratio100":${t / t10}%.2f""").getOrElse("")
         println(f"""{"op":"$name","t1":$t1%.2f,"t10":$t10%.2f,""" +
@@ -298,15 +279,8 @@ object ScaleBench {
     val handle = AnnIndexStore.openHandle(spark, path)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    def probeOnce(): Double = {
-      val t0 = System.nanoTime()
-      val out = Similarity.ivfPqResidualProbe(q, handle.current(),
-        k = 5, dim = 64)
-      out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
-        .agg(max("h")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = graft.BenchGuard.median(xs)
+    def probeOnce(): Double =
+      Bench.timed(Similarity.ivfPqResidualProbe(q, handle.current(), k = 5, dim = 64))._1
     var ingests = List.empty[Double]
     var probes = List.empty[Double]
     var expected = nBase
@@ -327,16 +301,14 @@ object ScaleBench {
     }
     def nFiles: Int = {
       val p = new org.apache.hadoop.fs.Path(s"$path/codes")
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).count(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
+      graft.sink.BatchCommit.dataFiles(
+        p.getFileSystem(spark.sessionState.newHadoopConf()), p).size
     }
     val filesFrag = nFiles
     val t0 = System.nanoTime()
     graft.ops.AnnIndexStore.compactCodes(spark, path, Some(cp))
     val compactSec = (System.nanoTime() - t0) / 1e9
-    val probeCompacted = median((1 to 3).map(_ => probeOnce()))
+    val probeCompacted = BenchGuard.median(Seq.fill(3)(probeOnce()))
     require(handle.current().codes.count() == expected,
       "compaction changed the code row count")
     val filesAfter = nFiles
@@ -345,7 +317,54 @@ object ScaleBench {
     val rootP = new org.apache.hadoop.fs.Path(dir.toString)
     rootP.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(rootP, true)
-    SteadyState(median(ingests), median(probes), filesFrag,
+    SteadyState(BenchGuard.median(ingests), BenchGuard.median(probes), filesFrag,
       compactSec, filesAfter, probeCompacted)
+  }
+}
+
+/** Measures the [[graft.plans.PrefixScanRewrite]] trade on a 30M-row
+  * global row_number so the numbers quoted in PLANS.md are
+  * reproducible. One session; the rule's size gate
+  * (`PrefixScanRewrite.MinBytesKey`) is set to `Long.MaxValue` for the
+  * plain side and to 0 for the rewrite side. Each side is warmed
+  * (codegen/JIT) and timed as a 3-run minimum through [[Bench.timed]].
+  * Fails with a non-zero exit unless the rule fires on the rewrite
+  * side only (checked before any timing), and unless the rewrite stays
+  * under 3× the plain window.
+  * Correctness of the rewrite is PrefixRewriteSpec's.
+  *
+  * Usage: runMain graft.PrefixRewriteBench
+  */
+object PrefixRewriteBench {
+  import graft.plans.PrefixScanRewrite
+
+  def main(args: Array[String]): Unit = {
+    val spark = Bench.session()
+    val q = "SELECT k, row_number() OVER (ORDER BY k) AS rn FROM big"
+    spark.range(30000000L).selectExpr("id", "hash(id) AS k").createOrReplaceTempView("big")
+    def gate[A](minBytes: Long)(body: => A): A = {
+      spark.conf.set(PrefixScanRewrite.MinBytesKey, minBytes)
+      body
+    }
+    def fires: Boolean =
+      spark.sql(q).queryExecution.optimizedPlan.toString.contains("__pfx_pid")
+    def bestOf3: Double = {
+      Bench.timed(spark.sql(q)) // warm codegen
+      Seq.fill(3)(Bench.timed(spark.sql(q))._1).min
+    }
+    try {
+      val (firedPlain, firedRewrite) = (gate(Long.MaxValue)(fires), gate(0L)(fires))
+      require(firedRewrite && !firedPlain,
+        s"rule fired on the rewrite side: $firedRewrite, on the plain side: $firedPlain")
+      val plain = gate(Long.MaxValue)(bestOf3)
+      val rewritten = gate(0L)(bestOf3)
+      println(f"[prefix] rewritten: $rewritten%.2f s, single-task window: $plain%.2f s")
+      // parity bound, not a win bound: at local scale the single task
+      // still fits one core's memory bandwidth, while the rewrite pays
+      // two extra full exchanges — its value is that the plan SURVIVES
+      // sizes where one task cannot. Guard against the rewrite being
+      // catastrophically slower.
+      require(rewritten < plain * 3.0, f"rewrite pathological: $rewritten%.2f vs $plain%.2f")
+    } finally spark.stop()
   }
 }

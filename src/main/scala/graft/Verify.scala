@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,10 +13,7 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark: SparkSession =
-      GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -22,28 +21,19 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        // query-scoped persists would otherwise accumulate in the
-        // CacheManager across all 333 dumps (see Bench's boundary
-        // clear — same rationale, same lifecycle owner)
-        spark.catalog.clearCache()
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any stale output from a previous run so the checker
         // reports a missing result instead of silently passing old data
-        val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(dir)
-        }
-        // boundary clear for the failure path too — AFTER the stale
-        // output removal and swallowed, so a session-fatal error
-        // (stopped context) can neither skip the removal nor abort
-        // the remaining dumps
-        try spark.catalog.clearCache()
-        catch { case scala.util.control.NonFatal(_) => () }
+        val dir = new Path(s"$outDir/$name")
+        dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
       }
+      // query-scoped persists would otherwise accumulate in the
+      // CacheManager across all 333 dumps (Bench's boundary clear).
+      // Swallowed, so a session-fatal error (stopped context) cannot
+      // abort the remaining dumps.
+      try Bench.clearCacheBoundary(spark)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

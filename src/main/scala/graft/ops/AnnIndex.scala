@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sink.SnapshotWriter
@@ -425,9 +425,7 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
       graft.sink.BatchCommit.markCommitted(fs, cp, batchId)
     }
     if (autoCompactMaxFiles > 0) {
-      val nFiles = ifs.listStatus(codesDir).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+      val nFiles = graft.sink.BatchCommit.dataFiles(ifs, codesDir).size
       if (nFiles > autoCompactMaxFiles)
         compactCodes(spark, indexPath, Some(checkpointDir),
           autoCompactTargetBytes)
@@ -476,11 +474,11 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
     // a regenerated corpus always invalidates the cache entry
     val state =
       if (f.isDirectory)
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .filter(x => x.isFile && !x.getName.startsWith("_") &&
-            !x.getName.startsWith("."))
-          .sortBy(_.getName)
-          .map(x => s"${x.getName}:${x.length}:${x.lastModified}")
+        graft.sink.BatchCommit.dataFiles(
+          FileSystem.getLocal(new org.apache.hadoop.conf.Configuration()),
+          new Path(f.toURI))
+          .sortBy(_.getPath.getName)
+          .map(x => s"${x.getPath.getName}:${x.getLen}:${x.getModificationTime}")
           .mkString(",")
       else s"${f.length}:${f.lastModified}"
     val key = s"${f.getCanonicalPath}|$state|" +
@@ -563,9 +561,7 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
         if (s.isDirectory && s.getPath.getName.startsWith(".stage_"))
           fs.delete(s.getPath, true)
     }
-    val dataFiles = fs.listStatus(dir)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+    val dataFiles = graft.sink.BatchCommit.dataFiles(fs, dir)
     if (dataFiles.length <= 1) return
     val totalBytes = dataFiles.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
@@ -872,9 +868,7 @@ object AnnIndexStore extends org.apache.spark.internal.Logging {
         val dir = new Path(s"$path/$t")
         val fs = dir.getFileSystem(conf)
         if (!fs.exists(dir)) s"$t:-"
-        else fs.listStatus(dir)
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
+        else graft.sink.BatchCommit.dataFiles(fs, dir)
           .map(s => s"$t/${s.getPath.getName}:${s.getLen}")
           .sorted.mkString("\n")
       }.mkString("\n")

@@ -2,7 +2,7 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Exactly-once micro-batch appends over file sinks.
@@ -302,28 +302,30 @@ object BatchCommit {
       fs.listStatus(live)
         .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
         .foreach(s => fs.delete(s.getPath, false))
-      for (f <- dataFiles(fs, leaf))
+      for (f <- dataFiles(fs, leaf).map(_.getPath))
         if (!fs.rename(f, new Path(live, prefix + f.getName)))
           throw new java.io.IOException(s"batch publish rename failed: $f")
     }
     fs.delete(stage, true)
   }
 
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath)
+  /** The data files directly under `dir`: plain files whose names
+    * start with neither '_' (commit markers) nor '.' (checksums,
+    * staging debris). The one definition every sink, index and
+    * harness listing uses.
+    */
+  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
 
   /** Directories under `dir` (inclusive) that directly hold data
     * files — the partition leaves of the staged write.
     */
   private def leafDataDirs(fs: FileSystem, dir: Path): Seq[Path] = {
-    val children = fs.listStatus(dir).toSeq
-    val here = if (children.exists(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
-      Seq(dir) else Seq.empty
-    here ++ children.filter(_.isDirectory)
+    val here = if (dataFiles(fs, dir).nonEmpty) Seq(dir) else Seq.empty
+    here ++ fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .flatMap(s => leafDataDirs(fs, s.getPath))
   }
 }

@@ -245,8 +245,7 @@ object SnapshotWriter {
     // full hidden pre-compaction copy that would otherwise never be
     // reaped (doubled storage + a stale-restore hazard)
     fs.delete(tmp, true); fs.delete(old, true)
-    val dataFiles = fs.listStatus(dirPath)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    val dataFiles = BatchCommit.dataFiles(fs, dirPath)
     if (dataFiles.length <= 1) return
     val totalBytes = dataFiles.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
@@ -288,10 +287,7 @@ object SnapshotWriter {
     val conf = spark.sessionState.conf
     fs.exists(new org.apache.hadoop.fs.Path(dir.getParent, s".compact_old_${dir.getName}")) ||
       fs.exists(dir) && {
-        val files = fs.listStatus(dir).filter { s =>
-          val name = s.getPath.getName
-          s.isFile && !name.startsWith("_") && !name.startsWith(".")
-        }
+        val files = BatchCommit.dataFiles(fs, dir)
         files.length > 1 &&
           files.map(_.getLen + conf.filesOpenCostInBytes).sum > conf.filesMaxPartitionBytes
       }
@@ -312,9 +308,6 @@ object SnapshotWriter {
     val dir = new org.apache.hadoop.fs.Path(
       partitionPath(rootDir, "pull_requests", repo, snapshotDate))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(dir) && fs.listStatus(dir).exists { s =>
-      val name = s.getPath.getName
-      s.isFile && !name.startsWith("_") && !name.startsWith(".")
-    }
+    fs.exists(dir) && BatchCommit.dataFiles(fs, dir).nonEmpty
   }
 }

@@ -389,4 +389,28 @@ class BenchGuardSpec extends AnyFunSuite with Matchers {
     // no flags: the adjudicated total IS the raw total
     BenchGuard.adjudicatedTotal(results, Map.empty) shouldBe 15.0 +- 1e-9
   }
+
+  // the harness's timed action and boundary clear (Bench.timed,
+  // Bench.clearCacheBoundary); the suite may share its session
+  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
+    .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+
+  test("the timed action evaluates every output column; the boundary clear empties the cache") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val df = spark.range(10).select(col("id"),
+      when(col("id") >= 0, raise_error(lit("boom"))).otherwise("x").as("bad"))
+    // count() never reads the raising column: Catalyst prunes it
+    df.count() shouldBe 10L
+    val e = intercept[Exception](Bench.timed(df))
+    e.getMessage should include("boom")
+    // and a clean frame times and returns the executed plan
+    val (sec, plan) = Bench.timed(spark.range(10).toDF("id"))
+    sec should be > 0.0
+    plan.toString should include("HashAggregate")
+    // the boundary clear leaves the session cache empty after a persist
+    spark.range(100).selectExpr("id * 2 AS v").persist().count()
+    spark.sharedState.cacheManager.isEmpty shouldBe false
+    Bench.clearCacheBoundary(spark) shouldBe 0
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
 }
