@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge learning — the counting loop behind
@@ -78,13 +77,13 @@ object Bpe {
             .select(col("wc"),
               replace(col("seq"), lit(s" $l $rr "), lit(s" $l$rr ")).as("seq"))
             .localCheckpoint()
-          unpersistCheckpoint(vocab)
+          Clusters.unpersistCheckpoint(vocab)
           vocab = next
         }
       }
       r += 1
     }
-    unpersistCheckpoint(vocab)
+    Clusters.unpersistCheckpoint(vocab)
     acc.toSeq.toDF("round", "lhs", "rhs", "merged", "n_occurrences")
   }
 
@@ -119,9 +118,4 @@ object Bpe {
       .filter(col("token") =!= "")
       .groupBy("token").agg(sum(col("wc")).as("n_occurrences"))
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
-    }
 }

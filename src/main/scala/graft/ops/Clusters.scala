@@ -111,7 +111,7 @@ object Clusters {
     * local checkpoint truncates lineage, so its data is gone for good
     * once unpersisted.
     */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
+  private[ops] def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD =>
       lr.rdd.unpersist(blocking = false)
     }

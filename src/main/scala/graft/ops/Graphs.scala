@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Graph analytics beyond [[Clusters]]' connected components:
@@ -79,11 +78,11 @@ object Graphs {
           (lit(15L * Scale / 100L) +
             expr("(85 * coalesce(s, bigint(0))) div 100")).as("r"))
         .localCheckpoint()
-      unpersistCheckpoint(ranks)
+      Clusters.unpersistCheckpoint(ranks)
       ranks = next
     }
-    unpersistCheckpoint(edges)
-    unpersistCheckpoint(nodes)
+    Clusters.unpersistCheckpoint(edges)
+    Clusters.unpersistCheckpoint(nodes)
     ranks.select(col("node"), col("r").as("rank_scaled"))
   }
 
@@ -167,7 +166,7 @@ object Graphs {
       .localCheckpoint()
     // adj is the only frame the rest of the plan (and the returned
     // frame) reads — free the wider edge-list checkpoint now
-    unpersistCheckpoint(e)
+    Clusters.unpersistCheckpoint(e)
     // the closure's edge stream is adj itself re-exploded (2 slim
     // longs per row — no second derivation of the scan→distinct→join
     // lineage); src's list arrives by equi-join, dst's by left join
@@ -329,7 +328,7 @@ object Graphs {
         .join(visited, Seq("node"), "left_anti")
         .withColumn("dist", lit(t.toLong))
       val nv = visited.unionAll(next).localCheckpoint()
-      unpersistCheckpoint(visited)
+      Clusters.unpersistCheckpoint(visited)
       visited = nv
       // the new round's frontier is exactly the rows just added
       frontier = visited.filter(col("dist") === t.toLong)
@@ -397,7 +396,7 @@ object Graphs {
         .join(counted, Seq("node"), "left")
         .select(col("node"), coalesce(col("nl"), col("old")).as("lbl"))
         .localCheckpoint()
-      unpersistCheckpoint(labels)
+      Clusters.unpersistCheckpoint(labels)
       labels = next
     }
     e.unpersist()
@@ -436,7 +435,7 @@ object Graphs {
     var e = canonEdges(edgesIn, aCol, bCol)
     for (_ <- 1 to rounds) {
       val ne = corePeelRound(e, k).localCheckpoint()
-      unpersistCheckpoint(e)
+      Clusters.unpersistCheckpoint(e)
       e = ne
     }
     coreDegrees(e)
@@ -500,7 +499,7 @@ object Graphs {
           s"k-core did not converge within $maxRounds rounds")
       val ne = corePeelRound(e, k).localCheckpoint()
       val nn = ne.count()
-      unpersistCheckpoint(e)
+      Clusters.unpersistCheckpoint(e)
       e = ne
       stable = nn == n
       n = nn
@@ -543,7 +542,7 @@ object Graphs {
         .filter(col("support") >= (k - 2).toLong)
         .select("a", "b")
       val ne = e.join(keep, Seq("a", "b"), "left_semi").localCheckpoint()
-      unpersistCheckpoint(e)
+      Clusters.unpersistCheckpoint(e)
       e = ne
     }
     trussOut(e, broadcastAdjacency)
@@ -649,7 +648,7 @@ object Graphs {
         .select("a", "b")
       val ne = e.join(keep, Seq("a", "b"), "left_semi").localCheckpoint()
       val nn = ne.count()
-      unpersistCheckpoint(e)
+      Clusters.unpersistCheckpoint(e)
       e = ne
       stable = nn == n
       n = nn
@@ -878,9 +877,4 @@ object Graphs {
       .select(col("label"), col("n_nodes"), col("e_in"), col("d_sum"),
         expr(ModularityExpr).as("q_part"))
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
-    }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -131,7 +130,7 @@ object KMeans {
           coalesce(col("ucv"), col("cv")).as("cv"),
           coalesce(col("un"), lit(0L)).as("n"))
         .localCheckpoint()
-      unpersistCheckpoint(cent)
+      Clusters.unpersistCheckpoint(cent)
       cent = next
     }
     // the final round's cent is checkpointed — c has no reader left
@@ -214,7 +213,7 @@ object KMeans {
           coalesce(col("ucv"), col("cv")).as("cv"),
           coalesce(col("un"), lit(0L)).as("n"))
         .localCheckpoint()
-      unpersistCheckpoint(cent)
+      Clusters.unpersistCheckpoint(cent)
       cent = next
     }
     // the final round's cent is checkpointed — c has no reader left
@@ -281,12 +280,4 @@ object KMeans {
           ct("cid").as("cid"))))("cid"))
       .drop("cents")
   }
-
-  /** Same as [[Clusters]]' helper: free the block-manager storage
-    * behind a superseded locally-checkpointed frame.
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
-    }
 }

@@ -54,7 +54,7 @@ trait SnapshotSink {
   /** Append one streaming micro-batch such that a crash-replay of the
     * same (runId, batchId) does NOT duplicate rows. File-lake sinks
     * override with the staged batchId-keyed publish
-    * ([[SnapshotWriter.appendTableBatch]]); the default falls back to
+    * ([[BatchCommit.stageAndPublish]]); the default falls back to
     * the at-least-once plain append for sinks with no stronger
     * primitive.
     */
@@ -112,7 +112,7 @@ class ParquetSnapshotSink(
     SnapshotWriter.writeAll(tables.named.map { case (name, df) => () => append(name, df) })
   override def appendBatch(table: String, df: DataFrame, runId: String,
       batchId: Long): Unit =
-    SnapshotWriter.appendTableBatch(df, s"$rootDir/$table", runId, batchId, fmt)
+    BatchCommit.stageAndPublish(df, s"$rootDir/$table", runId, batchId, fmt)
   /** Compacts the (snapshot_date, repo) partition of each table whose
     * files would cost a reader more than one read split
     * ([[SnapshotWriter.compactionPays]]), those tables concurrently.
@@ -218,7 +218,7 @@ class NdjsonSnapshotSink(
   override def appendBatch(table: String, df: DataFrame, runId: String,
       batchId: Long): Unit =
     if (streamingInserts) append(table, df)
-    else SnapshotWriter.appendTableBatch(
+    else BatchCommit.stageAndPublish(
       NdjsonSnapshotSink.jsonLines(df), s"$rootDir/$table", runId, batchId, "text")
 
   override def sweepBatchDebris(checkpointDir: String): Unit =

@@ -3,7 +3,6 @@ package graft.sink
 import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.transform.GithubTransform.GithubTables
 
@@ -166,30 +165,6 @@ object SnapshotWriter {
         errs.headOption.foreach(throw _)
       } finally { pool.shutdown(); () }
   }
-
-  /** Exactly-once per-micro-batch append: [[BatchCommit.stageAndPublish]]
-    * keyed by (runId, batchId), so a crash-replayed foreachBatch body
-    * converges to the same file set instead of appending the batch's
-    * rows a second time. The streaming bridges use this; plain
-    * [[appendTable]] stays for the non-replayable ChunkedEtl path,
-    * whose idempotency comes from the up-front partition delete.
-    */
-  def appendTableBatch(df: DataFrame, path: String, runId: String,
-      batchId: Long, fmt: String = "parquet"): Unit =
-    BatchCommit.stageAndPublish(df, path, runId, batchId, fmt)
-
-  /** NDJSON serialization — the exact payload format of the
-    * reference's BigQuery load jobs (main.py:673-677 serializes each
-    * chunk as newline-delimited JSON). Null fields are kept explicit
-    * so downstream schema-on-read matches the parquet tables.
-    */
-  def writeNdjson(df: DataFrame, path: String): Unit =
-    if (!df.isEmpty) {
-      df.select(org.apache.spark.sql.functions.to_json(
-        org.apache.spark.sql.functions.struct(df.columns.map(col): _*),
-        java.util.Collections.singletonMap("ignoreNullFields", "false")).as("value"))
-        .write.mode("overwrite").text(path)
-    }
 
   /** Small-file compaction for one (snapshot_date, repo) partition:
     * chunked/streaming appends leave one file per micro-batch per

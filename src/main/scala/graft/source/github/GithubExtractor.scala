@@ -91,11 +91,8 @@ class GithubExtractor(
 
   private val mapper = new ObjectMapper
 
-  // conditional GET: per-PR child URLs are exactly what a daily
-  // snapshot re-visits mostly unchanged — an ETag match serves the
-  // cached body as a 304 that costs no primary rate-limit budget
   private def getJson(url: String): JsonNode =
-    mapper.readTree(http.getConditional(url, authHeaders()).body)
+    mapper.readTree(http.get(url, authHeaders()).body)
 
   /** Commits for a PR, each enriched with the detail fetch's `files`
     * array (main.py:274-307).

@@ -9,20 +9,12 @@ import java.time.Duration
   * until `X-RateLimit-Reset` then retry forever; anything else is a
   * fatal job error. Clock and sleeper are injectable for tests.
   *
-  * Two documented GitHub behaviors the reference never modeled are
-  * handled on top:
-  *
-  *  - '''secondary rate limits''': 403/429 WITHOUT
-  *    `X-RateLimit-Remaining: 0`, carrying `Retry-After` seconds —
-  *    the abuse limiter. Previously these hit the fail-fast branch
-  *    and aborted the job; now the advertised delay is honored,
-  *    within the same bounded retry budget.
-  *  - '''conditional requests''' ([[getConditional]]): responses
-  *    carry an `ETag`; replaying the URL with `If-None-Match` answers
-  *    `304 Not Modified` with an empty body, and 304s do not count
-  *    against the primary rate limit — the documented way to stretch
-  *    the budget across the per-PR child fetches, which are exactly
-  *    the URLs a daily snapshot re-visits mostly unchanged.
+  * One documented GitHub behavior the reference never modeled is
+  * handled on top: '''secondary rate limits''', 403/429 WITHOUT
+  * `X-RateLimit-Remaining: 0`, carrying `Retry-After` seconds — the
+  * abuse limiter. Previously these hit the fail-fast branch and
+  * aborted the job; now the advertised delay is honored, within the
+  * same bounded retry budget.
   */
 final case class GithubResponse(
     status: Int,
@@ -104,17 +96,11 @@ class GithubHttp(
     }
 
   /** GET with the retry-on-rate-limit loop; non-200 aborts the job. */
-  def get(url: String, headers: Map[String, String] = Map.empty): GithubResponse =
-    getRaw(url, headers, allow304 = false)
-
-  private def getRaw(
-      url: String,
-      headers: Map[String, String],
-      allow304: Boolean): GithubResponse = {
+  def get(url: String, headers: Map[String, String] = Map.empty): GithubResponse = {
     var rateLimited = 0
     while (true) {
       val resp = send(url, "GET", headers)
-      if (resp.status == 200 || (allow304 && resp.status == 304)) return resp
+      if (resp.status == 200) return resp
       val limited = isRateLimited(resp) || isSecondaryLimited(resp)
       if (limited) {
         rateLimited += 1
@@ -132,78 +118,6 @@ class GithubHttp(
           (if (resp.body.isEmpty) "No response text" else resp.body))
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** Most entries an ETag cache holds before evicting its
-    * least-recently-used URL — bounds driver memory on scans visiting
-    * millions of child URLs while keeping the hot per-PR re-fetch set
-    * resident.
-    */
-  val EtagCacheMaxEntries: Int = 10000
-
-  /** Byte bound on the cache's accumulated response bodies: the entry
-    * bound alone is not a memory bound — commit-detail responses carry
-    * complete `files` arrays and can run hundreds of KB each, so 10k
-    * entries could hold multi-GB on the driver. LRU entries are
-    * evicted until the body total fits.
-    */
-  val EtagCacheMaxBytes: Long = 64L * 1024 * 1024
-
-  private var etagCacheBytes: Long = 0L
-
-  private def entryBytes(e: (String, GithubResponse)): Long =
-    // String is UTF-16 on heap; 2 bytes/char approximates the real
-    // footprint of body + etag without walking header maps
-    2L * (e._2.body.length + e._1.length)
-
-  private val etagCache =
-    new java.util.LinkedHashMap[String, (String, GithubResponse)](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, GithubResponse)]): Boolean = {
-        // evict-by-bytes is done in put(); only the entry bound here
-        // (removeEldestEntry can drop at most one entry per insert)
-        val evict = size() > EtagCacheMaxEntries
-        if (evict) etagCacheBytes -= entryBytes(e.getValue)
-        evict
-      }
-    }
-
-  private def etagCachePut(url: String, etag: String, resp: GithubResponse): Unit =
-    etagCache.synchronized {
-      Option(etagCache.remove(url)).foreach(old =>
-        etagCacheBytes -= entryBytes(old))
-      val e = (etag, resp)
-      val bytes = entryBytes(e)
-      if (bytes <= EtagCacheMaxBytes) { // oversized bodies never cached
-        etagCache.put(url, e)
-        etagCacheBytes += bytes
-        // shed least-recently-used entries until the byte budget holds
-        val it = etagCache.entrySet().iterator()
-        while (etagCacheBytes > EtagCacheMaxBytes && it.hasNext) {
-          val eldest = it.next()
-          if (eldest.getKey != url) {
-            etagCacheBytes -= entryBytes(eldest.getValue)
-            it.remove()
-          }
-        }
-      }
-    }
-
-  /** [[get]] with conditional-request caching: replays of a URL send
-    * `If-None-Match`; a 304 serves the cached body without spending
-    * primary-rate-limit budget. Rate-limit retries apply unchanged.
-    */
-  def getConditional(
-      url: String,
-      headers: Map[String, String] = Map.empty): GithubResponse = {
-    val cached = etagCache.synchronized(Option(etagCache.get(url)))
-    val h = cached.map(c => headers + ("If-None-Match" -> c._1)).getOrElse(headers)
-    val resp = getRaw(url, h, allow304 = cached.isDefined)
-    if (resp.status == 304) cached.get._2
-    else {
-      resp.header("ETag").foreach(t => etagCachePut(url, t, resp))
-      resp
-    }
   }
 
   /** POST for the token exchange; single rate-limit retry like the

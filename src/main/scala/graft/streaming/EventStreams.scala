@@ -171,7 +171,7 @@ object EventStreams {
       val fs = cp.getFileSystem(spark.sessionState.newHadoopConf())
       if (!graft.sink.BatchCommit.isCommitted(fs, cp, batchId)) {
         val runId = graft.sink.BatchCommit.pinnedRunId(fs, cp)
-        graft.sink.SnapshotWriter.appendTableBatch(batch.toDF(), path, runId, batchId)
+        graft.sink.BatchCommit.stageAndPublish(batch.toDF(), path, runId, batchId)
         graft.sink.BatchCommit.markCommitted(fs, cp, batchId)
       }
   }

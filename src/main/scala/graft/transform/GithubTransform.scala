@@ -83,10 +83,10 @@ object GithubTransform {
 
   def apply(raw: DataFrame, repo: String, snapshotDate: Date): GithubTables =
     GithubTables(
-      pullRequests(raw, repo, snapshotDate),
-      commits(raw, repo, snapshotDate),
-      reviewers(raw, repo, snapshotDate),
-      comments(raw, repo, snapshotDate))
+      pullRequestsFrom(raw, lit(repo), snapshotDate),
+      commitsFrom(raw, lit(repo), snapshotDate),
+      reviewersFrom(raw, lit(repo), snapshotDate),
+      commentsFrom(raw, lit(repo), snapshotDate))
 
   /** Multi-repo form: `raw` carries a `repo` string column (as
     * produced by the DSv2 source) and every output row takes its
@@ -107,9 +107,6 @@ object GithubTransform {
 
   private def snap(d: Date): Column = lit(d).cast("date").as("snapshot_date")
 
-  def pullRequests(raw: DataFrame, repo: String, snapshotDate: Date): DataFrame =
-    pullRequestsFrom(raw, lit(repo), snapshotDate)
-
   private def pullRequestsFrom(raw: DataFrame, repoCol: Column, snapshotDate: Date): DataFrame =
     base(raw).select(
       col("number").cast("long").as("pull_request_id"),
@@ -129,9 +126,6 @@ object GithubTransform {
       snap(snapshotDate))
 
   /** F1: two-level inner explode — grain one row per (commit, file). */
-  def commits(raw: DataFrame, repo: String, snapshotDate: Date): DataFrame =
-    commitsFrom(raw, lit(repo), snapshotDate)
-
   private def commitsFrom(raw: DataFrame, repoCol: Column, snapshotDate: Date): DataFrame =
     base(raw)
       .select(
@@ -159,9 +153,6 @@ object GithubTransform {
         snap(snapshotDate))
 
   /** F2: one row per review (main.py:496-509). */
-  def reviewers(raw: DataFrame, repo: String, snapshotDate: Date): DataFrame =
-    reviewersFrom(raw, lit(repo), snapshotDate)
-
   private def reviewersFrom(raw: DataFrame, repoCol: Column, snapshotDate: Date): DataFrame =
     base(raw)
       .select(
@@ -184,9 +175,6 @@ object GithubTransform {
     * equality mirrors Python dict membership (a None key matches a
     * None lookup); last match wins like dict overwrite.
     */
-  def comments(raw: DataFrame, repo: String, snapshotDate: Date): DataFrame =
-    commentsFrom(raw, lit(repo), snapshotDate)
-
   private def commentsFrom(raw: DataFrame, repoCol: Column, snapshotDate: Date): DataFrame =
     base(raw)
       .select(

@@ -109,19 +109,7 @@ class ExtOpsSpec extends AnyFunSuite with graft.TempDirs {
       KmvSketch.estimateFrom(globalHashes, k))
   }
 
-  test("NDJSON sink round-trips rows with explicit nulls; GraftSession registers SQL functions") {
-    val dir = tempDir("graft-ndjson").toString
-    val df = Seq((1L, "a", Option("x")), (2L, "b", None))
-      .toDF("id", "name", "opt")
-    graft.sink.SnapshotWriter.writeNdjson(df, dir)
-    val lines = spark.read.text(dir).collect().map(_.getString(0)).sorted
-    assert(lines.length == 2)
-    assert(lines.exists(_.contains("\"opt\":null"))) // nulls explicit (load-job contract)
-    val back = spark.read.schema(df.schema).json(dir)
-    assert(back.count() == 2)
-    assert(back.filter($"opt".isNull).select("id").collect().head.getLong(0) == 2L)
-
-    // GraftSession: functions registered on the (shared) session
+  test("GraftSession registers SQL functions on the shared session") {
     val s2 = graft.GraftSession.getOrCreate(master = "local[4]")
     assert(s2.sql("SELECT graft_float_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))")
       .collect().head.getDouble(0) == 5.0)

@@ -344,8 +344,8 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
 
     // clean append, then a full replay of the same batchId (the
     // crash-after-append-before-commits/N window)
-    SnapshotWriter.appendTableBatch(b0, path, "run1", 0L)
-    SnapshotWriter.appendTableBatch(b0, path, "run1", 0L)
+    BatchCommit.stageAndPublish(b0, path, "run1", 0L)
+    BatchCommit.stageAndPublish(b0, path, "run1", 0L)
     assert(readBack("parquet", root, "pull_requests") ==
       Set((1L, "batch0", "o/r"), (2L, "batch0", "o/r")))
 
@@ -359,7 +359,7 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
       new org.apache.hadoop.fs.Path(leaf, debrisName), false,
       spark.sparkContext.hadoopConfiguration)
     val b1 = rows("o/r", d1, "batch1")
-    SnapshotWriter.appendTableBatch(b1, path, "run1", 1L)
+    BatchCommit.stageAndPublish(b1, path, "run1", 1L)
     assert(readBack("parquet", root, "pull_requests") ==
       Set((1L, "batch0", "o/r"), (2L, "batch0", "o/r"),
         (1L, "batch1", "o/r"), (2L, "batch1", "o/r")),
@@ -367,9 +367,9 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
 
     // distinct batchIds stay independent; a foreign run's files are
     // never touched by this run's cleanup
-    SnapshotWriter.appendTableBatch(rows("o/r", d1, "otherrun"), path, "run2", 1L)
+    BatchCommit.stageAndPublish(rows("o/r", d1, "otherrun"), path, "run2", 1L)
     assert(readBack("parquet", root, "pull_requests").size == 6)
-    SnapshotWriter.appendTableBatch(b1, path, "run1", 1L) // replay again
+    BatchCommit.stageAndPublish(b1, path, "run1", 1L) // replay again
     assert(readBack("parquet", root, "pull_requests").size == 6)
 
     // no hidden stage directories left behind
@@ -385,6 +385,24 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
     sink.appendBatch("pull_requests", b0, "runx", 0L)
     assert(readBack("ndjson", root, "pull_requests") ==
       Set((1L, "nb0", "o/r"), (2L, "nb0", "o/r")))
+  }
+
+  test("NDJSON sink keeps null fields explicit in both load modes") {
+    for ((kind, streaming) <- Seq(("load-job", false), ("streaming-insert", true))) {
+      val root = tempDir(s"ndjsonnull-$kind").toString
+      val df = Seq((1L, Option("x"), d1, "o/r"), (2L, Option.empty[String], d1, "o/r"))
+        .toDF("pull_request_id", "opt", "snapshot_date", "target_repository")
+      new NdjsonSnapshotSink(spark, root, streaming).append("pull_requests", df)
+      val files = s"$root/pull_requests/*/*/*"
+      val lines = spark.read.textFile(files).collect()
+      assert(lines.length == 2, s"[$kind] ${lines.toSeq}")
+      // the load-job contract: a null column is a present field, not a
+      // missing one
+      assert(lines.exists(_.contains("\"opt\":null")), s"[$kind] ${lines.toSeq}")
+      val back = spark.read.schema("pull_request_id LONG, opt STRING").json(files)
+      assert(back.as[(Long, Option[String])].collect().toSet ==
+        Set((1L, Some("x")), (2L, None)), s"[$kind] round-trip")
+    }
   }
 
   test("batch-commit markers gate replays and pin one runId per checkpoint") {

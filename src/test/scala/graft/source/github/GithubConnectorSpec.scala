@@ -145,62 +145,6 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
     intercept[GithubApiError](http4.get("http://x"))
   }
 
-  test("ETag conditional requests serve 304s from cache on re-visited child URLs") {
-    withServer { server =>
-      server.etagsEnabled = true
-      val extractor = new GithubExtractor(new GithubHttp(), server.url)
-      val first = extractor.extractCommits("o/r", 1)
-      val afterFirst = server.requestCount.get
-      assert(server.notModifiedCount.get == 0)
-      // daily re-visit of the same PR: every child URL replays with
-      // If-None-Match, the server answers 304, and the parsed result
-      // is identical to the fresh fetch
-      val second = extractor.extractCommits("o/r", 1)
-      val childRequests = server.requestCount.get - afterFirst
-      assert(second.toString == first.toString)
-      assert(server.notModifiedCount.get == childRequests,
-        s"${server.notModifiedCount.get} of $childRequests re-requests were 304s")
-      assert(childRequests > 0)
-    }
-  }
-
-  test("ETag cache is byte-bounded: big bodies evict LRU entries early") {
-    val sent = collection.mutable.Buffer[(String, Boolean)]()
-    val http = new GithubHttp(sleeper = _ => (), clock = () => 1000L) {
-      override val EtagCacheMaxBytes: Long = 250L
-      override protected def send(
-          url: String, method: String, headers: Map[String, String]) = {
-        sent += ((url, headers.contains("If-None-Match")))
-        GithubResponse(200, "x" * 40, Map("ETag" -> s"tag-$url"))
-      }
-    }
-    // each entry is 2*(40-char body + ~18-char etag) ≈ 116 bytes, so
-    // the third insert pushes past 250 and evicts the LRU entry even
-    // though the ENTRY bound (10k) is nowhere near reached
-    http.getConditional("http://u/1")
-    http.getConditional("http://u/2")
-    http.getConditional("http://u/3")
-    http.getConditional("http://u/1")
-    assert(!sent.last._2, "byte-evicted entry still sent If-None-Match")
-    http.getConditional("http://u/3") // recently used — still resident
-    assert(sent.last._2, "recently-used entry fell out of the byte budget")
-
-    // a single body larger than the whole budget is never cached
-    val sent2 = collection.mutable.Buffer[(String, Boolean)]()
-    val http2 = new GithubHttp(sleeper = _ => (), clock = () => 1000L) {
-      override val EtagCacheMaxBytes: Long = 100L
-      override protected def send(
-          url: String, method: String, headers: Map[String, String]) = {
-        sent2 += ((url, headers.contains("If-None-Match")))
-        GithubResponse(200, "y" * 400, Map("ETag" -> "t"))
-      }
-    }
-    http2.getConditional("http://big")
-    http2.getConditional("http://big")
-    assert(sent2.map(_._2) == Seq(false, false),
-      "an oversized body was cached past the byte budget")
-  }
-
   test("secondary rate limit end-to-end: extraction completes after the advertised delay") {
     withServer { server =>
       server.secondaryLimitOnce = true

@@ -36,11 +36,6 @@ class MockGithubServer(val scalePrs: Int = 0) {
     */
   @volatile var secondaryLimitOnce: Boolean = false
   private val secondaryTripped = new AtomicInteger(0)
-  /** Serve ETags on child endpoints and answer matching
-    * If-None-Match with 304 (like the real API).
-    */
-  @volatile var etagsEnabled: Boolean = false
-  val notModifiedCount = new AtomicInteger(0)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   def port: Int = server.getAddress.getPort
@@ -184,25 +179,6 @@ class MockGithubServer(val scalePrs: Int = 0) {
     ex.close()
   }
 
-  /** Like the real API's child endpoints when `etagsEnabled`: every
-    * 200 carries a weak body-hash ETag, and a request replaying it in
-    * If-None-Match gets 304 with no body (304 must send -1 content
-    * length).
-    */
-  private def respondCacheable(ex: HttpExchange, body: String): Unit =
-    if (!etagsEnabled) respond(ex, 200, body)
-    else {
-      val tag = "W/\"" + Integer.toHexString(body.hashCode) + "\""
-      val inm = Option(ex.getRequestHeaders.getFirst("If-None-Match"))
-      if (inm.contains(tag)) {
-        notModifiedCount.incrementAndGet()
-        ex.getResponseHeaders.set("X-RateLimit-Remaining", "4999")
-        ex.getResponseHeaders.set("ETag", tag)
-        ex.sendResponseHeaders(304, -1)
-        ex.close()
-      } else respond(ex, 200, body, Map("ETag" -> tag))
-    }
-
   server.createContext("/", (ex: HttpExchange) => {
     requestCount.incrementAndGet()
     val path = ex.getRequestURI.getPath
@@ -245,17 +221,17 @@ class MockGithubServer(val scalePrs: Int = 0) {
             Map("Link" -> s"""<$url/repos/o/r/pulls?per_page=3&page=2>; rel="last""""))
       case p if p.matches(".*/pulls/\\d+/commits") =>
         val pr = p.split("/").takeRight(2).head.toInt
-        respondCacheable(ex, if (scalePrs > 0) scaleCommitsJson(pr) else commitsJson(pr))
+        respond(ex, 200, if (scalePrs > 0) scaleCommitsJson(pr) else commitsJson(pr))
       case p if p.matches(".*/commits/[^/]+") =>
         val sha = p.split("/").last
-        respondCacheable(ex,
+        respond(ex, 200,
           if (scalePrs > 0) scaleCommitDetailJson(sha) else commitDetailJson(sha))
       case p if p.matches(".*/pulls/\\d+/reviews") =>
         val pr = p.split("/").takeRight(2).head.toInt
-        respondCacheable(ex, if (scalePrs > 0) scaleReviewsJson(pr) else reviewsJson(pr))
+        respond(ex, 200, if (scalePrs > 0) scaleReviewsJson(pr) else reviewsJson(pr))
       case p if p.matches(".*/issues/\\d+/comments") =>
         val pr = p.split("/").takeRight(2).head.toInt
-        respondCacheable(ex, if (scalePrs > 0) scaleCommentsJson(pr) else commentsJson(pr))
+        respond(ex, 200, if (scalePrs > 0) scaleCommentsJson(pr) else commentsJson(pr))
       case p if p.endsWith("/installation") =>
         respond(ex, 200, """{"id": 42}""")
       case p if p.matches(".*/app/installations/\\d+/access_tokens") =>

@@ -50,7 +50,7 @@ class GithubTransformSpec extends AnyFunSuite {
           "created_at": "2023-01-15T10:30:00Z", "updated_at": "2023-01-16T14:20:00Z",
           "merged_at": "2023-01-17T09:00:00Z", "labels": [],
           "commit_data": [], "reviewer_data": [], "comment_data": []}""")
-    val out = GithubTransform.pullRequests(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).pullRequests.collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("pull_request_id") == 123L)
@@ -67,14 +67,14 @@ class GithubTransformSpec extends AnyFunSuite {
 
   test("mock-server nonstandard timestamp format parses identically") {
     val in = raw(pr(number = "7").replace("2023-01-15T10:30:00Z", "2023-01-15 10:30:00Z"))
-    val r = GithubTransform.pullRequests(in, repo, snap).collect().head
+    val r = GithubTransform(in, repo, snap).pullRequests.collect().head
     assert(r.getAs[Timestamp]("date_created") == ts("2023-01-15T10:30:00Z"))
   }
 
   // --- bug-id extraction (test_transform_data.py:35-113) --------------
 
   def bugIdOf(title: String): Option[Long] = {
-    val r = GithubTransform.pullRequests(raw(pr(title = s""""$title"""")), repo, snap)
+    val r = GithubTransform(raw(pr(title = s""""$title"""")), repo, snap).pullRequests
       .collect().head
     Option(r.getAs[java.lang.Long]("bug_id")).map(_.longValue)
   }
@@ -103,7 +103,7 @@ class GithubTransformSpec extends AnyFunSuite {
   test("labels: names, empty, null, null-name kept") {
     def labelsOf(json: String): scala.collection.Seq[String] = {
       val in = raw(json)
-      GithubTransform.pullRequests(in, repo, snap).collect().head
+      GithubTransform(in, repo, snap).pullRequests.collect().head
         .getAs[scala.collection.Seq[String]]("labels")
     }
     val withLabels = pr(number = "1")
@@ -130,7 +130,7 @@ class GithubTransformSpec extends AnyFunSuite {
 
   test("commit-file grain: one row per (commit, file), fields repeated") {
     val in = raw(pr(number = "42").replace(""""commit_data": []""", commitJson))
-    val out = GithubTransform.commits(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).commits.collect()
     assert(out.length == 3)
     assert(out.map(_.getAs[String]("filename")).toSet == Set("f1.py", "f2.py", "f3.py"))
     out.foreach { r =>
@@ -156,7 +156,7 @@ class GithubTransformSpec extends AnyFunSuite {
           {"sha": "c3", "commit": {"author": {"name": "C", "email": "e", "date": "2023-01-03T00:00:00Z"}},
            "files": []}]"""
     val in = raw(pr(number = "5").replace(""""commit_data": []""", two))
-    val out = GithubTransform.commits(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).commits.collect()
     assert(out.length == 3)
     assert(out.map(r => (r.getAs[String]("commit_sha"), r.getAs[String]("filename"))).toSet ==
       Set(("c1", "x"), ("c2", "y"), ("c2", "z")))
@@ -172,7 +172,7 @@ class GithubTransformSpec extends AnyFunSuite {
 
   test("reviewer flatten: states preserved, email null") {
     val in = raw(pr(number = "9").replace(""""reviewer_data": []""", reviewsJson))
-    val out = GithubTransform.reviewers(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).reviewers.collect()
     assert(out.length == 3)
     assert(out.map(r => (r.getAs[String]("reviewer_username"), r.getAs[String]("status"))).toSet ==
       Set(("rev1", "APPROVED"), ("rev2", "CHANGES_REQUESTED"), ("rev3", "COMMENTED")))
@@ -182,7 +182,7 @@ class GithubTransformSpec extends AnyFunSuite {
   test("null review user → null username") {
     val j = """"reviewer_data": [{"id": 1, "user": null, "state": "APPROVED", "submitted_at": "2023-01-16T10:00:00Z"}]"""
     val in = raw(pr(number = "9").replace(""""reviewer_data": []""", j))
-    val out = GithubTransform.reviewers(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).reviewers.collect()
     assert(out.head.getAs[String]("reviewer_username") == null)
   }
 
@@ -195,12 +195,12 @@ class GithubTransformSpec extends AnyFunSuite {
           {"id": 2, "user": {"login": "b"}, "state": "APPROVED", "submitted_at": "2023-01-16T10:00:00Z"},
           {"id": 3, "user": {"login": "c"}, "state": "APPROVED", "submitted_at": "2023-01-16T14:00:00Z"}]"""
     val in = raw(pr(number = "1").replace(""""reviewer_data": []""", approvals))
-    val r = GithubTransform.pullRequests(in, repo, snap).collect().head
+    val r = GithubTransform(in, repo, snap).pullRequests.collect().head
     assert(r.getAs[Timestamp]("date_approved") == ts("2023-01-16T10:00:00Z"))
 
     val noApproval = raw(pr(number = "2").replace(""""reviewer_data": []""", reviewsJson
       .replace("APPROVED", "DISMISSED")))
-    val r2 = GithubTransform.pullRequests(noApproval, repo, snap).collect().head
+    val r2 = GithubTransform(noApproval, repo, snap).pullRequests.collect().head
     assert(r2.getAs[Timestamp]("date_approved") == null)
   }
 
@@ -214,7 +214,7 @@ class GithubTransformSpec extends AnyFunSuite {
           {"id": 102, "user": {"login": "u3"}, "body": null, "created_at": "2023-01-16T09:02:00Z", "pull_request_review_id": null},
           {"id": 103, "user": {"login": "u4"}, "body": "", "created_at": "2023-01-16T09:03:00Z", "pull_request_review_id": null}]"""
     val in = raw(pr(number = "1").replace(""""comment_data": []""", cj))
-    val out = GithubTransform.comments(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).comments.collect()
     val counts = out.map(r => r.getAs[Long]("comment_id") -> r.getAs[Long]("character_count")).toMap
     assert(counts == Map(100L -> 17L, 101L -> 5L, 102L -> 0L, 103L -> 0L))
     out.foreach { r =>
@@ -238,7 +238,7 @@ class GithubTransformSpec extends AnyFunSuite {
     val in = raw(pr(number = "1")
       .replace(""""reviewer_data": []""", rj)
       .replace(""""comment_data": []""", cj))
-    val out = GithubTransform.comments(in, repo, snap).collect()
+    val out = GithubTransform(in, repo, snap).comments.collect()
     val statuses = out.map(r => r.getAs[Long]("comment_id") -> r.getAs[String]("status")).toMap
     // id 789 appears twice: Python dict keeps the last state.
     assert(statuses == Map(1L -> "CHANGES_REQUESTED", 2L -> "COMMENTED", 3L -> null, 4L -> null))
