@@ -64,13 +64,6 @@ object SnapshotWriter {
       fmt: String = "parquet"): DataFrame =
     spark.read.option("mergeSchema", "true").format(fmt).load(path)
 
-  /** Explicit partition delete (reference K1 DELETE, main.py:604-638):
-    * removes the (snapshot_date, repo) partition directory of every
-    * table. ChunkedEtl calls this once up front so per-chunk appends
-    * are idempotent under rerun even when a table is empty in the
-    * first chunk (dynamic overwrite alone can't clear a partition it
-    * writes no rows to).
-    */
   /** Hive-style partition directory for (table, repo, date) — uses
     * the SAME escaping Spark's writer uses for partition directories.
     * URLEncoder agrees for '/' but diverges on space ('+' vs '%20'),
@@ -87,6 +80,13 @@ object SnapshotWriter {
     s"$rootDir/$table/snapshot_date=$snapshotDate/target_repository=$escapedRepo"
   }
 
+  /** Explicit partition delete (reference K1 DELETE, main.py:604-638):
+    * removes the (snapshot_date, repo) partition directory of every
+    * table. ChunkedEtl calls this once up front so per-chunk appends
+    * are idempotent under rerun even when a table is empty in the
+    * first chunk (dynamic overwrite alone can't clear a partition it
+    * writes no rows to).
+    */
   def deleteSnapshot(
       spark: SparkSession,
       rootDir: String,

@@ -23,8 +23,9 @@ import graft.model.GithubSchemas
   * Options:
   *  - `repos` (required): comma-separated "owner/repo" list — one
   *    input partition per repo by default (parallelism across repos;
-  *    fetches within a repo stay sequential because GitHub rate
-  *    limits are per-token, main.py:213-241);
+  *    within a repo the pages stay in order, main.py:213-241, and each
+  *    page's PRs are enriched [[GithubExtractor.EnrichInFlight]] at a
+  *    time, well under GitHub's per-token concurrency limit);
   *  - `pagesPerPartition` (optional int): split each repo into
   *    page-range partitions using the `Link: rel="last"` page count —
   *    for deployments with per-partition tokens / generous limits.

@@ -2,30 +2,13 @@ package graft.source.github
 
 import java.net.{URI, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import scala.jdk.CollectionConverters._
 
-/** Paginated PR extraction with per-PR enrichment, mirroring the
-  * reference generator (main.py:176-377):
-  *
-  *  - `GET /repos/{repo}/pulls?state=all&sort=created&direction=asc&
-  *    per_page=N`, following the RFC-5988 `Link: rel="next"` header by
-  *    extracting its `page` parameter (stop on missing/invalid page,
-  *    empty batch, or no next link);
-  *  - per PR (skipping PRs without `number` — they stay in the batch
-  *    unenriched, main.py:228-230): commits list + per-commit detail
-  *    fetch merged as `files`, reviews filtered to non-null `user`,
-  *    issue comments filtered to non-null `user` and non-empty `body`;
-  *  - `refreshAuth` invoked before every page fetch so 1-hour
-  *    installation tokens can't expire mid-scan (main.py:213-215).
-  *
-  * Yields chunks of enriched PR documents as single-line JSON strings
-  * (chunk = one API page), ready for `from_json` with
-  * [[graft.model.GithubSchemas.rawPullRequest]].
-  */
 /** One PR list-page document plus the two scalar fields the DSv2
   * source can project or filter without touching `value`'s
   * enrichment fetches. Captured at parse time — no re-parse per row.
@@ -84,6 +67,27 @@ final case class PrScanPrune(
     maxCreated.exists(b => createdAt.exists(_.take(10) > b.take(10)))
 }
 
+/** Paginated PR extraction with per-PR enrichment, mirroring the
+  * reference generator (main.py:176-377):
+  *
+  *  - `GET /repos/{repo}/pulls?state=all&sort=created&direction=asc&
+  *    per_page=N`, following the RFC-5988 `Link: rel="next"` header by
+  *    extracting its `page` parameter (stop on missing/invalid page,
+  *    empty batch, or no next link);
+  *  - per PR (skipping PRs without `number` — they stay in the batch
+  *    unenriched, main.py:228-230): commits list + per-commit detail
+  *    fetch merged as `files`, reviews filtered to non-null `user`,
+  *    issue comments filtered to non-null `user` and non-empty `body`.
+  *    Pages are walked in order, but a page's PRs are enriched
+  *    [[GithubExtractor.EnrichInFlight]] at a time (one PR's requests
+  *    stay in order on one thread);
+  *  - `refreshAuth` invoked before every page fetch so 1-hour
+  *    installation tokens can't expire mid-scan (main.py:213-215).
+  *
+  * Yields chunks of enriched PR documents as single-line JSON strings
+  * (chunk = one API page), ready for `from_json` with
+  * [[graft.model.GithubSchemas.rawPullRequest]].
+  */
 class GithubExtractor(
     http: GithubHttp,
     apiUrl: String,
@@ -97,12 +101,13 @@ class GithubExtractor(
   /** Commits for a PR, each enriched with the detail fetch's `files`
     * array (main.py:274-307).
     */
-  def extractCommits(repo: String, prNumber: Long): ArrayNode = {
-    val commits = getJson(s"$apiUrl/repos/$repo/pulls/$prNumber/commits")
+  def extractCommits(repo: String, prNumber: Long,
+      fetch: String => JsonNode = getJson): ArrayNode = {
+    val commits = fetch(s"$apiUrl/repos/$repo/pulls/$prNumber/commits")
       .asInstanceOf[ArrayNode]
     commits.elements.asScala.foreach { commit =>
       val sha = Option(commit.get("sha")).map(_.asText).getOrElse("")
-      val detail = getJson(s"$apiUrl/repos/$repo/commits/$sha")
+      val detail = fetch(s"$apiUrl/repos/$repo/commits/$sha")
       val files = Option(detail.get("files"))
         .getOrElse(mapper.createArrayNode)
       commit.asInstanceOf[ObjectNode].set[JsonNode]("files", files)
@@ -111,8 +116,9 @@ class GithubExtractor(
   }
 
   /** Reviews with null users dropped (main.py:310-341). */
-  def extractReviewers(repo: String, prNumber: Long): ArrayNode = {
-    val reviews = getJson(s"$apiUrl/repos/$repo/pulls/$prNumber/reviews")
+  def extractReviewers(repo: String, prNumber: Long,
+      fetch: String => JsonNode = getJson): ArrayNode = {
+    val reviews = fetch(s"$apiUrl/repos/$repo/pulls/$prNumber/reviews")
     val out = mapper.createArrayNode
     reviews.elements.asScala
       .filter(r => r.hasNonNull("user"))
@@ -123,8 +129,9 @@ class GithubExtractor(
   /** Issue comments with null user or null/empty body dropped
     * (main.py:344-377).
     */
-  def extractComments(repo: String, prNumber: Long): ArrayNode = {
-    val comments = getJson(s"$apiUrl/repos/$repo/issues/$prNumber/comments")
+  def extractComments(repo: String, prNumber: Long,
+      fetch: String => JsonNode = getJson): ArrayNode = {
+    val comments = fetch(s"$apiUrl/repos/$repo/issues/$prNumber/comments")
     val out = mapper.createArrayNode
     comments.elements.asScala
       .filter(c => c.hasNonNull("user") &&
@@ -214,28 +221,84 @@ class GithubExtractor(
         val resp = http.get(url, authHeaders())
         val batch = mapper.readTree(resp.body).asInstanceOf[ArrayNode]
         var sawPastUpper = false
-        val docs = batch.elements.asScala.flatMap { pr =>
+        val admitted = batch.elements.asScala.flatMap { pr =>
           val state = Option(pr.get("state")).filter(!_.isNull).map(_.asText)
           val created = Option(pr.get("created_at")).filter(!_.isNull).map(_.asText)
           sawPastUpper ||= prune.pastUpperBound(created)
-          if (!prune.admits(state, created)) None
-          else {
-            val number = Option(pr.get("number")).filter(n => n.canConvertToLong && n.asLong != 0L)
-            number match {
-              case Some(n) if enrich =>
-                val obj = pr.asInstanceOf[ObjectNode]
-                obj.set[JsonNode]("commit_data", extractCommits(repo, n.asLong))
-                obj.set[JsonNode]("reviewer_data", extractReviewers(repo, n.asLong))
-                obj.set[JsonNode]("comment_data", extractComments(repo, n.asLong))
-              case _ => // unenriched: no number (main.py:228-230) or pruned value
-            }
-            Some(PrDoc(mapper.writeValueAsString(pr), state, created))
-          }
-        }.toSeq
+          if (prune.admits(state, created)) Some((pr, state, created)) else None
+        }.toIndexedSeq
+        // unenriched: no number (main.py:228-230) or pruned value
+        if (enrich) enrichPage(repo, admitted.flatMap { case (pr, _, _) =>
+          Option(pr.get("number")).filter(n => n.canConvertToLong && n.asLong != 0L)
+            .map(n => (pr.asInstanceOf[ObjectNode], n.asLong))
+        })
         page =
           if (batch.size == 0 || sawPastUpper) None
           else nextPage(resp.header("Link")).filter(n => endPage < 0 || n <= endPage)
-        docs
+        admitted.map { case (pr, state, created) =>
+          PrDoc(mapper.writeValueAsString(pr), state, created)
+        }
       }
     }.filter(_.nonEmpty)
+
+  /** Sets `commit_data`, `reviewer_data` and `comment_data` on each of
+    * a page's numbered PRs. The calling thread and up to
+    * `EnrichInFlight - 1` workers each claim the next PR and run its
+    * fetches in the reference's order. The first failure stops every
+    * thread before its next GET, and is rethrown as itself once all
+    * have stopped. The workers live for this call only: they are
+    * joined in the `finally`, so none outlives a page, a failure or
+    * an interrupt.
+    */
+  private def enrichPage(repo: String, prs: IndexedSeq[(ObjectNode, Long)]): Unit = {
+    val claimed = new AtomicInteger(0)
+    val failure = new AtomicReference[Throwable]()
+    def fetch(url: String): JsonNode =
+      if (failure.get != null) throw GithubExtractor.Stopped else getJson(url)
+    def work(): Unit = {
+      var i = claimed.getAndIncrement()
+      while (i < prs.size && failure.get == null) {
+        val (pr, n) = prs(i)
+        try {
+          pr.set[JsonNode]("commit_data", extractCommits(repo, n, fetch))
+          pr.set[JsonNode]("reviewer_data", extractReviewers(repo, n, fetch))
+          pr.set[JsonNode]("comment_data", extractComments(repo, n, fetch))
+        } catch { case t: Throwable => failure.compareAndSet(null, t) }
+        i = claimed.getAndIncrement()
+      }
+    }
+    val workers = Seq.fill(math.min(GithubExtractor.EnrichInFlight, prs.size) - 1) {
+      val t = new Thread(() => work(), "github-enrich")
+      t.setDaemon(true)
+      t
+    }
+    try {
+      workers.foreach(_.start())
+      work()
+      workers.foreach(_.join())
+    } finally {
+      // reached early only on an interrupt or a failed start: stop
+      // the workers' requests
+      workers.foreach(_.interrupt())
+      workers.foreach(_.join())
+    }
+    Option(failure.get).foreach(e => throw e)
+  }
+}
+
+object GithubExtractor {
+  /** PRs of one page enriched at once by one extractor. The per-PR
+    * fan-out (commits list, one detail per commit, reviews, comments;
+    * about 14 requests a PR) is the extraction's cost, and one
+    * request stream leaves a multi-core host idle: on 4 cores the
+    * chunked load read about 80 PRs/s with 2 in flight, 100 with 4
+    * and 88 with 8. GitHub's secondary limit allows 100 concurrent
+    * requests per token; a DSv2 read keeps at most 4 per running
+    * repo partition in flight, and `GithubHttp`'s Retry-After branch
+    * stays the backstop.
+    */
+  val EnrichInFlight: Int = 4
+
+  /** Thrown instead of a GET once another PR of the page has failed. */
+  private object Stopped extends RuntimeException(null, null, false, false)
 }

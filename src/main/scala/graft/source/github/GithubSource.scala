@@ -6,9 +6,11 @@ package graft.source.github
   * Batch ETL extracts through the DataSource V2 scan
   * ([[GithubDataSource]], `format("github")`): one input partition per
   * repo, or per page range with `pagesPerPartition`, so repos extract
-  * in parallel while the pages inside one partition are fetched in
-  * order — GitHub rate limits are per token, and parallel fan-out
-  * within one token just multiplies 403s (SURVEY.md §7.5). Each
+  * in parallel. Inside one partition the pages are fetched in order,
+  * and each page's PR enrichment runs
+  * [[GithubExtractor.EnrichInFlight]] PRs at a time: the per-PR
+  * fan-out is most of the requests, and 4 in flight per extractor
+  * stays far below GitHub's 100 concurrent requests per token. Each
   * partition builds its own client through [[openExtractor]], so the
   * credentials in [[Options]] travel to the executors as reader
   * options. [[graft.jobs.ChunkedEtl]] walks one repo's pages on the
@@ -47,7 +49,9 @@ object GithubSource {
     (extractor, () => tokenManager.foreach(tm => currentToken = Some(tm.token(repo))))
   }
 
-  /** Enriched PR JSON lines (driver-side, sequential, rate-limited). */
+  /** Enriched PR JSON lines, read on the driver: pages in order, each
+    * page's PRs enriched [[GithubExtractor.EnrichInFlight]] at a time.
+    */
   def fetchRaw(repo: String, opts: Options): Seq[String] = {
     val (extractor, refreshAuth) = openExtractor(repo, opts)
     extractor.pages(repo, opts.chunkSize, refreshAuth).flatten.toSeq

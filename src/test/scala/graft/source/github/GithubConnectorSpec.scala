@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.GithubSchemas
 import graft.sink.SnapshotWriter
 import graft.transform.GithubTransform
@@ -148,9 +150,10 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
   test("secondary rate limit end-to-end: extraction completes after the advertised delay") {
     withServer { server =>
       server.secondaryLimitOnce = true
+      // the sleeper may run on an enrichment worker thread
       val sleeps = collection.mutable.Buffer[Long]()
       val extractor = new GithubExtractor(
-        new GithubHttp(sleeper = sleeps += _), server.url)
+        new GithubHttp(sleeper = ms => sleeps.synchronized(sleeps += ms)), server.url)
       val prs = extractor.pages("o/r", chunkSize = 3).toSeq
       assert(prs.map(_.size).sum == 5)
       assert(sleeps.toSeq == Seq(2000L), s"slept $sleeps")
@@ -201,6 +204,71 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
       val chunks = extractor.pages("o/r", chunkSize = 3).toSeq
       assert(chunks.map(_.length).sum == 5)
     }
+  }
+
+  /** Records every GET's URL as it starts and the peak number in
+    * flight; holds each child (non-list) GET `holdMs`, and answers
+    * `failUrl` with a 404 without calling the server.
+    */
+  class RecordingHttp(holdMs: Long, failUrl: Option[String] = None) extends GithubHttp() {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    override protected def send(url: String, method: String, headers: Map[String, String]) = {
+      started.add(url)
+      peak.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+      try {
+        if (failUrl.exists(url.endsWith)) GithubResponse(404, "not found", Map.empty)
+        else {
+          if (!url.contains("/pulls?")) Thread.sleep(holdMs)
+          super.send(url, method, headers)
+        }
+      } finally inFlight.decrementAndGet()
+    }
+  }
+
+  def enrichThreadsAlive(): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith("github-enrich") && t.isAlive)
+
+  test("a page's PRs are enriched concurrently, at most EnrichInFlight at once, in list order") {
+    val server = new MockGithubServer(scalePrs = 16)
+    server.start()
+    try {
+      val http = new RecordingHttp(holdMs = 5)
+      val chunks = new GithubExtractor(http, server.url).pages("o/r", chunkSize = 8).toSeq
+      assert(chunks.map(_.size) == Seq(8, 8))
+      assert(http.peak.get >= 2 && http.peak.get <= GithubExtractor.EnrichInFlight,
+        s"peak in flight ${http.peak.get}")
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+      val numbers = chunks.map(_.map(d => mapper.readTree(d).get("number").asInt))
+      assert(numbers == Seq(1 to 8, 9 to 16))
+      // one PR's requests stay in order: its commits list before any detail
+      val urls = http.started.asScala.toIndexedSeq
+      for (n <- 1 to 16) {
+        val list = urls.indexWhere(_.endsWith(s"/pulls/$n/commits"))
+        val details = urls.zipWithIndex.collect { case (u, i) if u.contains(s"/commits/s$n-") => i }
+        assert(list >= 0 && details.nonEmpty && details.forall(_ > list), s"PR $n: list $list, details $details")
+      }
+      assert(enrichThreadsAlive().isEmpty)
+    } finally server.stop()
+  }
+
+  test("a failing child GET stops the page's enrichment and rethrows the GithubApiError itself") {
+    val server = new MockGithubServer(scalePrs = 16)
+    server.start()
+    try {
+      val failing = "/repos/o/r/pulls/5/reviews"
+      val http = new RecordingHttp(holdMs = 5, failUrl = Some(failing))
+      val e = intercept[GithubApiError](
+        new GithubExtractor(http, server.url).pages("o/r", chunkSize = 8).toSeq)
+      assert(e.getMessage.contains("404"))
+      val urls = http.started.asScala.toIndexedSeq
+      val at = urls.indexWhere(_.endsWith(failing))
+      assert(at >= 0 && urls.size - at - 1 <= GithubExtractor.EnrichInFlight - 1,
+        s"${urls.size - at - 1} requests started after the failing one")
+      assert(enrichThreadsAlive().isEmpty, enrichThreadsAlive().map(_.getName))
+    } finally server.stop()
   }
 
   // --- end-to-end: source → transform → snapshot sink -----------------
@@ -298,8 +366,6 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
   }
 
   // --- generalized filter pushdown (state / created_at) ---------------
-
-  import scala.jdk.CollectionConverters._
 
   def freshSource(server: MockGithubServer): org.apache.spark.sql.DataFrame =
     spark.read.format("github")
