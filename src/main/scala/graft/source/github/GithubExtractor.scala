@@ -244,17 +244,22 @@ class GithubExtractor(
   /** Sets `commit_data`, `reviewer_data` and `comment_data` on each of
     * a page's numbered PRs. The calling thread and up to
     * `EnrichInFlight - 1` workers each claim the next PR and run its
-    * fetches in the reference's order. The first failure stops every
-    * thread before its next GET, and is rethrown as itself once all
-    * have stopped. The workers live for this call only: they are
-    * joined in the `finally`, so none outlives a page, a failure or
-    * an interrupt.
+    * fetches in the reference's order. The first failure, or an
+    * interrupt of any of the threads, stops every thread before its
+    * next GET, and is rethrown as itself (an `InterruptedException`
+    * for an interrupt) once all have stopped. The workers live for
+    * this call only: they are joined in the `finally`, so none
+    * outlives a page, a failure or an interrupt.
     */
   private def enrichPage(repo: String, prs: IndexedSeq[(ObjectNode, Long)]): Unit = {
     val claimed = new AtomicInteger(0)
     val failure = new AtomicReference[Throwable]()
+    // a blocking socket read ignores Thread.interrupt, so each GET
+    // checks for one first
     def fetch(url: String): JsonNode =
-      if (failure.get != null) throw GithubExtractor.Stopped else getJson(url)
+      if (Thread.interrupted()) throw new InterruptedException
+      else if (failure.get != null) throw GithubExtractor.Stopped
+      else getJson(url)
     def work(): Unit = {
       var i = claimed.getAndIncrement()
       while (i < prs.size && failure.get == null) {
@@ -290,9 +295,10 @@ object GithubExtractor {
   /** PRs of one page enriched at once by one extractor. The per-PR
     * fan-out (commits list, one detail per commit, reviews, comments;
     * about 14 requests a PR) is the extraction's cost, and one
-    * request stream leaves a multi-core host idle: on 4 cores the
-    * chunked load read about 80 PRs/s with 2 in flight, 100 with 4
-    * and 88 with 8. GitHub's secondary limit allows 100 concurrent
+    * request stream leaves a multi-core host idle: on 4 cores, over
+    * `GithubHttp`'s blocking transport, the chunked load read a median
+    * 61 PRs/s with 2 in flight, 64 with 4 and 63 with 8 (4 runs
+    * each). GitHub's secondary limit allows 100 concurrent
     * requests per token; a DSv2 read keeps at most 4 per running
     * repo partition in flight, and `GithubHttp`'s Retry-After branch
     * stays the backstop.

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - scale discipline: library code never calls `.collect()` — an
   *    operator that collects isn't distributed. Driver-side output is
   *    confined to the CLI mains;
-  *  - `println` only in CLI mains (library code must stay silent).
+  *  - `println` only in CLI mains (library code must stay silent);
+  *  - one transport for the GitHub connector: under `graft/source`
+  *    only `GithubHttp.scala` opens connections.
   */
 class StyleSpec extends AnyFunSuite {
 
@@ -73,5 +75,14 @@ class StyleSpec extends AnyFunSuite {
   test("println confined to CLI mains") {
     for ((p, lines) <- mainSources if !isCli(p); (l, i) <- lines.zipWithIndex)
       assert(!l.contains("println("), s"$p:${i + 1} prints in library code")
+  }
+
+  test("only GithubHttp opens connections in the source connector") {
+    val source = Paths.get("src/main/scala/graft/source")
+    for ((p, lines) <- mainSources
+         if p.startsWith(source) && p.getFileName.toString != "GithubHttp.scala";
+         (l, i) <- lines.zipWithIndex)
+      assert(!l.contains("openConnection") && !l.contains("java.net.http"),
+        s"$p:${i + 1} opens its own connection")
   }
 }

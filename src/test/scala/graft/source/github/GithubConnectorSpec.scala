@@ -220,7 +220,7 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
       try {
         if (failUrl.exists(url.endsWith)) GithubResponse(404, "not found", Map.empty)
         else {
-          if (!url.contains("/pulls?")) Thread.sleep(holdMs)
+          if (holdMs > 0 && !url.contains("/pulls?")) Thread.sleep(holdMs)
           super.send(url, method, headers)
         }
       } finally inFlight.decrementAndGet()
@@ -269,6 +269,70 @@ class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
         s"${urls.size - at - 1} requests started after the failing one")
       assert(enrichThreadsAlive().isEmpty, enrichThreadsAlive().map(_.getName))
     } finally server.stop()
+  }
+
+  test("an interrupt stops the page's enrichment at the next GET, though socket reads ignore it") {
+    val server = new MockGithubServer(scalePrs = 16)
+    // held at the server, not by a client-side sleep (which an
+    // interrupt would cut short)
+    server.holdChildMs = 250
+    server.start()
+    try {
+      val http = new RecordingHttp(holdMs = 0)
+      val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val reader = new Thread(() =>
+        try new GithubExtractor(http, server.url).pages("o/r", chunkSize = 8).toSeq
+        catch { case t: Throwable => outcome.set(t) })
+      reader.start()
+      val deadline = System.nanoTime + 10000000000L
+      while (http.started.size < 1 + GithubExtractor.EnrichInFlight && System.nanoTime < deadline)
+        Thread.sleep(5)
+      val before = http.started.size
+      assert(before == 1 + GithubExtractor.EnrichInFlight, s"$before GETs started")
+      val t0 = System.nanoTime
+      reader.interrupt()
+      reader.join(10000)
+      val waitedS = (System.nanoTime - t0) / 1e9
+      assert(!reader.isAlive && waitedS < 5, s"pages still running after $waitedS s")
+      assert(outcome.get.isInstanceOf[InterruptedException], outcome.get)
+      assert(http.started.size - before <= GithubExtractor.EnrichInFlight,
+        s"${http.started.size - before} GETs started after the interrupt")
+      assert(enrichThreadsAlive().isEmpty, enrichThreadsAlive().map(_.getName))
+    } finally server.stop()
+  }
+
+  test("a renamed repo's 301 is followed: the extraction equals the target repo's") {
+    withServer { server =>
+      val extractor = new GithubExtractor(new GithubHttp(), server.url)
+      val renamed = extractor.pages("o/renamed", chunkSize = 3).toSeq
+      assert(server.repoRequests.get("o/renamed") > 0)
+      assert(renamed.map(_.size) == Seq(3, 2))
+      assert(renamed == extractor.pages("o/r", chunkSize = 3).toSeq)
+    }
+  }
+
+  test("a 404 carries its body into the GithubApiError, and the drained socket serves the next GET") {
+    withServer { server =>
+      val http = new GithubHttp()
+      val e = intercept[GithubApiError](http.get(s"${server.url}/nowhere"))
+      assert(e.getMessage.contains("404") && e.getMessage.contains("not found: /nowhere"), e.getMessage)
+      val empty = intercept[GithubApiError](http.get(s"${server.url}/gone"))
+      assert(empty.getMessage.endsWith(": No response text"), empty.getMessage)
+      assert(http.get(s"${server.url}/repos/o/r/pulls/1/reviews").status == 200)
+      // each error body was read to the end, so all three GETs shared one socket
+      val ports = server.clientPorts.asScala.toSeq
+      assert(ports.size == 3 && ports.distinct.size == 1, ports)
+    }
+  }
+
+  test("an extraction leaves no HTTP client or enrichment thread alive") {
+    withServer { server =>
+      val docs = GithubSource.fetchRaw("o/r", GithubSource.Options(apiUrl = server.url, chunkSize = 3))
+      assert(docs.size == 5)
+      val left = Thread.getAllStackTraces.keySet.asScala.toSeq.filter(t => t.isAlive &&
+        (t.getName.startsWith("HttpClient-") || t.getName.startsWith("github-enrich")))
+      assert(left.isEmpty, left.map(_.getName))
+    }
   }
 
   // --- end-to-end: source → transform → snapshot sink -----------------

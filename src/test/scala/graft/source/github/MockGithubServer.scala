@@ -2,6 +2,7 @@ package graft.source.github
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -21,6 +22,13 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * the small corpus carries (missing `number`, nonstandard timestamp,
   * null users, empty bodies), so mode-equivalence can be asserted at
   * real corpus scale.
+  *
+  * Every repo path under `o/renamed` answers a 301 to the same path
+  * under `o/r`, as GitHub does for a renamed repo; `/gone` answers a
+  * 404 with no body, and any other unknown path a 404 with a JSON
+  * message. Handlers run on a small pool, so `holdChildMs` (which
+  * delays every response but the list pages) holds concurrent
+  * requests side by side.
   */
 class MockGithubServer(val scalePrs: Int = 0) {
   val requestCount = new AtomicInteger(0)
@@ -36,8 +44,13 @@ class MockGithubServer(val scalePrs: Int = 0) {
     */
   @volatile var secondaryLimitOnce: Boolean = false
   private val secondaryTripped = new AtomicInteger(0)
+  @volatile var holdChildMs: Long = 0L
+  /** Client port of every request, in arrival order (connection reuse). */
+  val clientPorts = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  private val handlers = Executors.newFixedThreadPool(8)
+  server.setExecutor(handlers)
   def port: Int = server.getAddress.getPort
   def url: String = s"http://127.0.0.1:$port"
 
@@ -174,14 +187,17 @@ class MockGithubServer(val scalePrs: Int = 0) {
     ex.getResponseHeaders.set("X-RateLimit-Remaining", "4999")
     headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
     val bytes = body.getBytes(UTF_8)
-    ex.sendResponseHeaders(status, bytes.length)
+    // -1: no body at all (0 would mean a chunked one)
+    ex.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
   }
 
   server.createContext("/", (ex: HttpExchange) => {
     requestCount.incrementAndGet()
+    clientPorts.add(ex.getRemoteAddress.getPort)
     val path = ex.getRequestURI.getPath
+    if (holdChildMs > 0 && !path.endsWith("/pulls")) Thread.sleep(holdChildMs)
     "/repos/([^/]+/[^/]+)".r.findFirstMatchIn(path).foreach { m =>
       repoRequests.merge(m.group(1), 1, (a, b) => a + b)
     }
@@ -197,6 +213,10 @@ class MockGithubServer(val scalePrs: Int = 0) {
         """{"message": "You have exceeded a secondary rate limit"}""",
         Map("Retry-After" -> "2"))
     } else path match {
+      case p if p.startsWith("/repos/o/renamed/") =>
+        val target = p.replaceFirst("^/repos/o/renamed/", "/repos/o/r/") +
+          (if (query.isEmpty) "" else s"?$query")
+        respond(ex, 301, "", Map("Location" -> s"$url$target"))
       case p if p.endsWith("/pulls") && scalePrs > 0 =>
         pullsQueries.add(query)
         scalePullsResponse(ex, query)
@@ -237,11 +257,16 @@ class MockGithubServer(val scalePrs: Int = 0) {
       case p if p.matches(".*/app/installations/\\d+/access_tokens") =>
         respond(ex, 201,
           s"""{"token": "tok-${requestCount.get}", "expires_at": "${java.time.Instant.now.plusSeconds(3600)}"}""")
+      case "/gone" =>
+        respond(ex, 404, "")
       case _ =>
         respond(ex, 404, s"""{"message": "not found: $path"}""")
     }
   })
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    handlers.shutdownNow()
+  }
 }
