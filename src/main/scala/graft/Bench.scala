@@ -14,25 +14,12 @@ import org.apache.spark.sql.functions.{col, max, struct, xxhash64}
   * file is the machine-readable copy.
   *
   * The object also holds the one runner every measurement main goes
-  * through: session, timed action, sentinel and boundary cache clear.
+  * through: timed action, sentinel and boundary cache clear (the
+  * session is [[GraftSession.forHost]]).
   * (Here, not in BenchGuard: it collects, and library code never
   * collects — StyleSpec-gated.)
   */
 object Bench {
-
-  /** The harness session: [[GraftSession]] on `local[SPARK_GRAFT_CPUS]`
-    * with `SPARK_GRAFT_SHUFFLE` shuffle partitions; both default to the
-    * JVM's available processors. Explain audits the plans of this same
-    * session, so they are the plans Bench and Verify run.
-    */
-  def session(): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cpus)
-    val spark = GraftSession.getOrCreate(s"local[$cpus]", shuffle)
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** The timed action: build the frame, then hash ALL its output
     * columns, `max` the hash and collect. A bare count() would let
@@ -101,7 +88,7 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "bench_out.subset.json"
       else "bench_out.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-    val spark = session()
+    val spark = GraftSession.forHost()
     // absorb session/codegen warmup so the first timed query isn't
     // charged for JVM startup
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -5,14 +5,14 @@ package graft
   * transform pipelines over a tiny in-memory fixture. Used to check
   * scan pushdown (PushedFilters/ReadSchema), broadcast vs shuffle
   * joins, and WholeStageCodegen coverage — the 100 TB design gates.
-  * The plans come from the harness session ([[Bench.session]]), so
+  * The plans come from the harness session ([[GraftSession.forHost]]), so
   * they are the plans Bench and Verify run.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption
-    val spark = Bench.session()
+    val spark = GraftSession.forHost()
 
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_ == name)) {

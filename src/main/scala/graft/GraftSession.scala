@@ -52,4 +52,19 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     spark
   }
+
+  /** The engine's session sized to this host, shared by the
+    * measurement mains and the job mains: `master` (default
+    * `local[SPARK_GRAFT_CPUS]`) with `SPARK_GRAFT_SHUFFLE` shuffle
+    * partitions; both counts default to the JVM's available
+    * processors.
+    */
+  def forHost(master: Option[String] = None): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cpus)
+    val spark = getOrCreate(master.getOrElse(s"local[$cpus]"), shuffle)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

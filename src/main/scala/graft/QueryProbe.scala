@@ -18,7 +18,7 @@ object QueryProbe {
     val sfDir = args.drop(2).headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val spark = Bench.session()
+    val spark = GraftSession.forHost()
     val fn = SparkEntry.queries(name)
     // normalize away per-session noise (expression ids, plan ids,
     // codegen ids, subquery ids) so only genuine SHAPE differences —

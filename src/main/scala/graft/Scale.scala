@@ -34,7 +34,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/scaledata/x10")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Bench.session()
+    val spark = GraftSession.forHost()
 
     val docs = Tables.documents(spark, src)
     val nDocs = docs.agg(max("doc_id")).head.getLong(0) + 1
@@ -193,7 +193,7 @@ object ScaleBench {
     val huge = args.lift(2) // optional x100 dir → second slope decade
     val runs = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = Bench.session()
+    val spark = GraftSession.forHost()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     def time(fn: (SparkSession, String) => DataFrame, d: String): Double =
@@ -339,7 +339,7 @@ object PrefixRewriteBench {
   import graft.plans.PrefixScanRewrite
 
   def main(args: Array[String]): Unit = {
-    val spark = Bench.session()
+    val spark = GraftSession.forHost()
     val q = "SELECT k, row_number() OVER (ORDER BY k) AS rn FROM big"
     spark.range(30000000L).selectExpr("id", "hash(id) AS k").createOrReplaceTempView("big")
     def gate[A](minBytes: Long)(body: => A): A = {

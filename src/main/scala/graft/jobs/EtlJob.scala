@@ -70,12 +70,7 @@ object EtlJob {
       privateKeyPem = pem,
       token = env.get("GITHUB_TOKEN"))
 
-    val spark = sparkOpt.getOrElse(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = sparkOpt.getOrElse(graft.GraftSession.forHost(sys.env.get("SPARK_MASTER")))
     spark.sparkContext.setLogLevel("WARN")
 
     // one snapshot date per run, computed up front so a run crossing

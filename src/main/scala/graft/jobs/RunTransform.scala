@@ -2,8 +2,6 @@ package graft.jobs
 
 import java.sql.Date
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.GithubSchemas
 import graft.transform.GithubTransform
 
@@ -16,22 +14,11 @@ import graft.transform.GithubTransform
 object RunTransform {
   def main(args: Array[String]): Unit = {
     val Array(input, repo, snapshotDate, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.forHost(sys.env.get("SPARK_MASTER"))
 
     val raw = spark.read.schema(GithubSchemas.rawPullRequest).json(input)
     val t = GithubTransform(raw, repo, Date.valueOf(snapshotDate))
-    for ((name, df) <- Seq(
-        "pull_requests" -> t.pullRequests,
-        "commits" -> t.commits,
-        "reviewers" -> t.reviewers,
-        "comments" -> t.comments)) {
+    for ((name, df) <- t.named) {
       df.write.mode("overwrite").parquet(s"$outDir/$name")
       println(s"[transform] $name: ${spark.read.parquet(s"$outDir/$name").count()} rows")
     }

@@ -239,16 +239,6 @@ object KMeans {
   def assignStep(c: DataFrame, cent: DataFrame): DataFrame =
     assignRowsCos(c, cent).select(col("id"), col("cid"))
 
-  /** One squared-L2 Lloyd assignment pass, the [[assignStep]] shape
-    * with the PQ-encoder comparator: `‖c‖² − 2·v·c` (the candidate's
-    * own `‖v‖²` is constant within its argmin and dropped — the
-    * [[Similarity.pqCodes]] discipline, so both engines compare the
-    * exact same doubles), ties to the lowest cluster id via
-    * min(struct) — here `array_min` over the same structs.
-    */
-  def assignStepL2(c: DataFrame, cent: DataFrame): DataFrame =
-    assignRowsL2(c, cent).select(col("id"), col("cid"))
-
   /** Cosine assignment as a projection that KEEPS every input column
     * (plus `cid`), so the training round's update aggregation reads
     * the vector straight off the assignment pass — no corpus

@@ -29,14 +29,6 @@ object TextOps {
       ascii(w.substr(lit(1), lit(1))).cast("long") * 101L +
       ascii(w.substr(lit(-1), lit(1))).cast("long")
 
-  /** Word 3-gram shingles as strings ("w1 w2 w3"); [] under 3 words. */
-  def wordShingles(ws: Column): Column =
-    when(size(ws) >= 3,
-      transform(sequence(lit(1), size(ws) - 2), i =>
-        concat_ws(" ",
-          element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))))
-      .otherwise(array().cast("array<string>"))
-
   /** Word 3-gram shingle hashes (poly combine of word hashes, mod
     * 2^31-1); [] under 3 words. Used by MinHash.
     */

@@ -12,7 +12,7 @@ import org.scalatest.matchers.should.Matchers
   * from the repo root, plus the baseline-selection rules from the r5
   * advice (numeric round ordering, self-comparison exclusion).
   */
-class BenchGuardSpec extends AnyFunSuite with Matchers {
+class BenchGuardSpec extends AnyFunSuite with Matchers with GraftSuite {
 
   // the exact byte shape the driver writes: escaped quotes inside a
   // "tail" string field
@@ -391,10 +391,7 @@ class BenchGuardSpec extends AnyFunSuite with Matchers {
   }
 
   // the harness's timed action and boundary clear (Bench.timed,
-  // Bench.clearCacheBoundary); the suite may share its session
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-
+  // Bench.clearCacheBoundary)
   test("the timed action evaluates every output column; the boundary clear empties the cache") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val df = spark.range(10).select(col("id"),

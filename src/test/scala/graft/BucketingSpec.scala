@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed-table co-located join: the write-side technique that
@@ -8,19 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * sides bucketed by the join key into the same bucket count join
   * with NO exchange on either side.
   */
-class BucketingSpec extends AnyFunSuite with TempDirs {
+class BucketingSpec extends AnyFunSuite with GraftSuite with TempDirs {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // force non-broadcast joins
+  override protected def suiteConf = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("join of co-bucketed tables plans no shuffle exchange") {
-    // runtime confs: the suite may share a session with other specs
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     try {
       val sf = "/root/testdata/sf0.001"
       val tmp = tempDir("graft-buckets")
@@ -47,7 +39,6 @@ class BucketingSpec extends AnyFunSuite with TempDirs {
         spark.read.parquet(s"$sf/orders.parquet")
           .select("o_custkey").distinct().count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS customer_b")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.GithubSchemas
@@ -11,21 +10,19 @@ import graft.transform.GithubTransform
   * lose them. (Wall-clock benchmarks catch big regressions; these
   * catch the structural ones before they cost anything.)
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with GraftSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  override protected def suiteConf = Seq(
     // keep the index-lifecycle queries' LAZY probe plans visible to
     // the global gates below: the production localCheckpoint would
     // collapse them to an RDD scan and the CartesianProduct / BNL /
     // partitionless-window audits would silently stop seeing them
-    // (the session accepts the temp-dir leak that implies)
-    .config("spark.graft.materializeLifecycleResults", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    // (the suite accepts the temp-dir leak that implies)
+    "spark.graft.materializeLifecycleResults" -> "false",
+    // the audits gate the plans production builds at this data size:
+    // the prefix-scan rewrite stays behind its default size gate
+    graft.plans.PrefixScanRewrite.MinBytesKey ->
+      graft.plans.PrefixScanRewrite.MinBytesDefault.toString)
 
   val sf = "/root/testdata/sf0.001"
 

@@ -17,12 +17,9 @@ import graft.transform.GithubTransform
   */
 object PropertySpec extends Properties("graft") {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // a ScalaCheck suite has no afterAll: it shares the session and sets
+  // no runtime conf
+  lazy val spark: SparkSession = GraftSuite.session
 
   import spark.implicits._
 

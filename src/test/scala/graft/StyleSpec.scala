@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    confined to the CLI mains;
   *  - `println` only in CLI mains (library code must stay silent);
   *  - one transport for the GitHub connector: under `graft/source`
-  *    only `GithubHttp.scala` opens connections.
+  *    only `GithubHttp.scala` opens connections;
+  *  - one session recipe per tree: `GraftSession.scala` in main,
+  *    `GraftSuite.scala` in test.
   */
 class StyleSpec extends AnyFunSuite {
 
@@ -84,5 +86,15 @@ class StyleSpec extends AnyFunSuite {
          (l, i) <- lines.zipWithIndex)
       assert(!l.contains("openConnection") && !l.contains("java.net.http"),
         s"$p:${i + 1} opens its own connection")
+  }
+
+  test("one session recipe per tree") {
+    val recipe = "(SparkSession|GraftSession)\\s*\\.\\s*builder".r
+    def code(l: String): String =
+      if (l.trim.startsWith("*") || l.trim.startsWith("/*")) "" else l.split("//", 2).head
+    for ((files, home) <- Seq(mainSources -> "GraftSession.scala", testSources -> "GraftSuite.scala");
+         (p, lines) <- files if p.getFileName.toString != home;
+         (l, i) <- lines.zipWithIndex)
+      assert(recipe.findFirstIn(code(l)).isEmpty, s"$p:${i + 1} builds its own session")
   }
 }

@@ -2,20 +2,12 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand examples for HITS, mutual information parts, burst z, and
   * RAKE keyword scoring. */
-class AnalyticsExtraSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnalyticsExtraSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -1,20 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Poisson bootstrap: exact equality with a sequential model of the
   * same integer hash ladder, partition invariance, and statistical
   * sanity of the deterministic multiplicities.
   */
-class BootstrapSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BootstrapSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
   import Bootstrap._

@@ -1,20 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 import graft.source.github.{GithubSource, MockGithubServer}
 
-class ExtOpsSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtOpsSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 
@@ -110,7 +102,9 @@ class ExtOpsSpec extends AnyFunSuite with graft.TempDirs {
   }
 
   test("GraftSession registers SQL functions on the shared session") {
-    val s2 = graft.GraftSession.getOrCreate(master = "local[4]")
+    // GraftSuite's own arguments: getOrCreate applies its confs to the
+    // session it returns, and any other shuffle count would leak
+    val s2 = graft.GraftSession.getOrCreate("local[4]", 4)
     assert(s2.sql("SELECT graft_float_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))")
       .collect().head.getDouble(0) == 5.0)
   }

@@ -1,19 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integer PageRank: bit-equality with a sequential model, partition
   * invariance, and sanity of the rank ordering on a known graph.
   */
-class GraphsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphsSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

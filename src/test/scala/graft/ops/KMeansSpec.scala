@@ -1,20 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the Lloyd's k-means codebook trainer: bit-equality with
   * an independent sequential model, partition invariance (the point of
   * the quantized-update discipline), and empty-cluster carry-forward.
   */
-class KMeansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KMeansSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +12,7 @@ import graft.functions.ZOrderExpression
   * files than under a 1-d sort (measured on real per-file min/max
   * stats, the same statistics parquet footer pruning uses).
   */
-class LayoutSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 

@@ -5,7 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Real-decoder coverage for [[Multimodal]]: actual PNG / GIF bytes
@@ -13,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition-pass entry points, plus the auto-vs-stub selection rules
   * that keep the text-corpus oracle queries byte-stable.
   */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with graft.GraftSuite {
 
   private def pngBytes(w: Int, h: Int, rgb: Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)

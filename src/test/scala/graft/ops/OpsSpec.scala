@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * library-only paths (decode stub, hyperplane LSH, recall behavior)
   * and planted-duplicate semantics.
   */
-class OpsSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OpsSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 
@@ -1388,8 +1380,7 @@ class OpsSpec extends AnyFunSuite with graft.TempDirs {
     val c = (0L until 24L).map(i => (i, mk(i))).toDF("nid", "nv")
     val dir = tempDir("annhb")
     val path = dir.resolve("ix").toString
-    spark.conf.set("spark.graft.ann.lockStaleMs", "400")
-    try {
+    withConf("spark.graft.ann.lockStaleMs" -> "400") {
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
       def slowBuild() = {
         builds.incrementAndGet()
@@ -1415,7 +1406,7 @@ class OpsSpec extends AnyFunSuite with graft.TempDirs {
       assert(AnnIndexStore.isBuilt(spark, path))
       assert(!new java.io.File(dir.toFile, "ix.lock").exists,
         "winner did not release its lock")
-    } finally spark.conf.unset("spark.graft.ann.lockStaleMs")
+    }
   }
 
   test("a builder whose lock was reclaimed discards its build and converges as a waiter") {
@@ -1426,8 +1417,7 @@ class OpsSpec extends AnyFunSuite with graft.TempDirs {
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     val lock = new org.apache.hadoop.fs.Path(dir.resolve("ix.lock").toString)
-    spark.conf.set("spark.graft.ann.lockStaleMs", "400")
-    try {
+    withConf("spark.graft.ann.lockStaleMs" -> "400") {
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
       def build() = {
         // FIRST attempt only: simulate a mid-build reclaim the way a
@@ -1456,7 +1446,7 @@ class OpsSpec extends AnyFunSuite with graft.TempDirs {
       assert(!fs.exists(lock), "converged build did not release the lock")
       assert(!dir.toFile.listFiles.exists(_.getName.startsWith(".ix.build_")),
         "discarded attempt leaked its staging dir")
-    } finally spark.conf.unset("spark.graft.ann.lockStaleMs")
+    }
   }
 
   test("ingest auto-compaction: trigger fires past the file threshold; rows and ranks unchanged") {

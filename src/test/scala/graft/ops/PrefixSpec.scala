@@ -2,7 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Prefix-scan operators (distributed global row numbers, 2-d
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and partition invariance — the properties the range-partitioned
   * decomposition must preserve exactly.
   */
-class PrefixSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrefixSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -2,7 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import graft.functions.TopKRows
   * model or hand-checked fixture, with partition invariance where the
   * operator's point is shuffle behavior.
   */
-class RangeOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeOpsSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -2,7 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the readability counts. All are order-free integer folds, so
   * partition layout must not change a bit.
   */
-class SeriesOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeriesOpsSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

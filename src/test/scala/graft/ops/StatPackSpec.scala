@@ -2,7 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,14 +14,7 @@ import graft.functions.MisraGries
   * MG's BOUNDS are partition-invariant even though its raw
   * estimates are not).
   */
-class StatPackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StatPackSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

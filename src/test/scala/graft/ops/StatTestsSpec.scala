@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition invariance — every statistic is an order-free integer
   * fold, so re-shuffling the input must not change a single bit.
   */
-class StatTestsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StatTestsSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -2,7 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (every operator is an order-free aggregation or a per-entity
   * window, so shuffling the input must not change a single bit).
   */
-class StatsTimeseriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "5")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StatsTimeseriesSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

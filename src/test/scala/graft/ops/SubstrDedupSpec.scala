@@ -2,7 +2,6 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-model tests for the ExactSubstr-style duplicated-span
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pipeline must reproduce a sequential single-machine model computed
   * with the same md5-nibble anchor rule.
   */
-class SubstrDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubstrDedupSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PrefixScanRewrite optimizer rule: global
@@ -9,25 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * still produce the exact 1..N numbering; anything outside the
   * rule's narrow scope must pass through untouched.
   */
-class PrefixRewriteSpec extends AnyFunSuite {
+class PrefixRewriteSpec extends AnyFunSuite with graft.GraftSuite {
 
-  // a dedicated session: getOrCreate would return another suite's
-  // session and silently skip the extension injection
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the rule is size-gated (default 4 GiB); force it on so these
-      // specs exercise the rewrite on tiny fixtures
-      .config(PrefixScanRewrite.MinBytesKey, "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s
-  }
+  // the rule is size-gated (default 4 GiB); force it on so these specs
+  // exercise the rewrite on tiny fixtures
+  override protected def suiteConf = Seq(PrefixScanRewrite.MinBytesKey -> "0")
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
@@ -104,17 +89,14 @@ class PrefixRewriteSpec extends AnyFunSuite {
 
   test("below the size gate the native plan stands") {
     import spark.implicits._
-    val prev = spark.conf.get(PrefixScanRewrite.MinBytesKey)
-    try {
-      spark.conf.set(PrefixScanRewrite.MinBytesKey,
-        PrefixScanRewrite.MinBytesDefault.toString)
+    withConf(PrefixScanRewrite.MinBytesKey -> PrefixScanRewrite.MinBytesDefault.toString) {
       (1L to 100L).toDF("k").createOrReplaceTempView("pfx_small")
       val df = spark.sql(
         "SELECT k, row_number() OVER (ORDER BY k) AS rn FROM pfx_small")
       assert(!finalPlan(df).contains("__pfx_pid"),
         "rule fired below its size threshold")
       assert(df.collect().map(_.getInt(1)).sorted.toSeq == (1 to 100))
-    } finally spark.conf.set(PrefixScanRewrite.MinBytesKey, prev)
+    }
   }
 
   test("partitioned windows and non-row_number windows pass through") {

@@ -2,7 +2,7 @@ package graft.sink
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.transform.GithubTransform.GithubTables
@@ -13,14 +13,7 @@ import graft.transform.GithubTransform.GithubTables
   * NDJSON load jobs, streaming-insert fallback, sentinel existence
   * probe, async job completion) asserted without a network.
   */
-class BigQuerySinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BigQuerySinkSpec extends AnyFunSuite with graft.GraftSuite {
 
   import spark.implicits._
 

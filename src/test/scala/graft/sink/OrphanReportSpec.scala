@@ -1,7 +1,6 @@
 package graft.sink
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[BatchCommit.listOrphans]] — the read-only debris inventory an
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plus a foreign run's file and stage that no checkpoint here can
   * adjudicate.
   */
-class OrphanReportSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrphanReportSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   private def touch(f: java.io.File, bytes: Int = 0): Unit = {
     f.getParentFile.mkdirs()

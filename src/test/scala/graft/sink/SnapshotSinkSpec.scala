@@ -2,7 +2,7 @@ package graft.sink
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.transform.GithubTransform.GithubTables
@@ -12,14 +12,7 @@ import graft.transform.GithubTransform.GithubTables
   * implementation — a new warehouse sink must pass this suite
   * unchanged.
   */
-class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotSinkSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 
@@ -306,14 +299,7 @@ class SnapshotSinkSpec extends AnyFunSuite with graft.TempDirs {
     // four small files fit one 128 MB split with their open cost: kept
     sink.finalizeSnapshot("o/r", d1)
     assert(partFiles == files, "finalize rewrote a partition that fits one split")
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "1m")
-    try sink.finalizeSnapshot("o/r", d1)
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    withConf("spark.sql.files.maxPartitionBytes" -> "1m")(sink.finalizeSnapshot("o/r", d1))
     assert(partFiles == 1, "finalize left a partition that overflows one split")
     assert(readBack("parquet", root, "commits") == before, "compaction changed the rows")
   }

@@ -5,7 +5,6 @@ import java.security.{KeyPairGenerator, Signature}
 import java.sql.Date
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,14 +14,7 @@ import graft.model.GithubSchemas
 import graft.sink.SnapshotWriter
 import graft.transform.GithubTransform
 
-class GithubConnectorSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GithubConnectorSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   // --- JWT (reference tests/test_jwt.py) ------------------------------
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, date_add, date_sub, datediff, lag, to_date}
 import org.apache.spark.sql.streaming.OutputMode
@@ -14,14 +13,7 @@ final case class SpecDoc(doc_id: Long, ts: Timestamp, text: String)
 /** Arriving embedding row for the streaming PQ-encode spec. */
 final case class SpecVec(vec_id: Long, v: Array[Float])
 
-class EventStreamsSpec extends AnyFunSuite with graft.TempDirs {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventStreamsSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 

@@ -3,7 +3,7 @@ package graft.transform
 import java.sql.{Date, Timestamp}
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.GithubSchemas
@@ -12,14 +12,7 @@ import graft.model.GithubSchemas
   * tests/test_transform_data.py (the correctness contract per
   * SURVEY.md §5 / FIXTURES.md §2). Comparisons are order-insensitive.
   */
-class GithubTransformSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GithubTransformSpec extends AnyFunSuite with graft.GraftSuite {
 
   val repo = "mozilla/test-repo"
   val snap: Date = Date.valueOf("2024-06-01")
