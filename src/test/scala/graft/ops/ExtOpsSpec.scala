@@ -1,5 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,8 +13,25 @@ class ExtOpsSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
 
   import spark.implicits._
 
+  /** A session on the shared context as a user who builds their own
+    * session sees it: without the graft functions, which every
+    * GraftSession (the shared one included) carries through
+    * GraftExtensions. Only `GraftFunctions.register` can supply them.
+    */
+  private def sessionWithoutGraftFunctions(): SparkSession = {
+    val s = spark.newSession().asInstanceOf[SparkSession]
+    GraftFunctions.all.foreach { case (name, _) =>
+      s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name))
+    }
+    intercept[AnalysisException](
+      s.sql("SELECT graft_float_norm(array(CAST(3.0 AS FLOAT)))").collect())
+    s
+  }
+
   test("SQL registration: custom expressions callable from spark.sql") {
+    val spark = sessionWithoutGraftFunctions()
     GraftFunctions.register(spark)
+    import spark.implicits._
     Seq((1L, "the quick brown fox jumps")).toDF("id", "text")
       .createOrReplaceTempView("sqldocs")
     val row = spark.sql(
@@ -102,9 +122,14 @@ class ExtOpsSpec extends AnyFunSuite with graft.GraftSuite with graft.TempDirs {
   }
 
   test("GraftSession registers SQL functions on the shared session") {
-    // GraftSuite's own arguments: getOrCreate applies its confs to the
-    // session it returns, and any other shuffle count would leak
-    val s2 = graft.GraftSession.getOrCreate("local[4]", 4)
+    // getOrCreate returns the thread's active session, so make that one
+    // without the functions: only GraftSession's register call adds them
+    val bare = sessionWithoutGraftFunctions()
+    val active = SparkSession.getActiveSession
+    SparkSession.setActiveSession(bare)
+    val s2 = try graft.GraftSession.getOrCreate("local[4]", 4)
+    finally active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    assert(s2 eq bare)
     assert(s2.sql("SELECT graft_float_norm(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))")
       .collect().head.getDouble(0) == 5.0)
   }
